@@ -72,6 +72,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import storage
 from . import textops as T
 
 _META_SCHEMA = (
@@ -150,74 +151,54 @@ def _df_cap(max_df: int, max_df_frac: float, n: int) -> int:
 
 def foreach_batch_update(spark: SparkSession, state_path: str):
     """Structured-Streaming ingestion into a saved curation state:
-    returns a ``(batch_df, batch_id) -> None`` function for
-    ``writeStream.foreachBatch`` that absorbs each micro-batch as one
-    :meth:`CurationState.update` delta — the continuous form of the
-    daily-delta pattern (tests/test_incremental.py proves streamed
-    ingestion equals a full batch rebuild).
+    each micro-batch lands as one :meth:`CurationState.update` delta,
+    under the at-least-once absorb contract of :mod:`.storage`
+    (``meta.max_doc_id`` is the high-water mark;
+    tests/test_incremental.py proves streamed ingestion equals a full
+    batch rebuild).
 
-    At-least-once safety rides on the monotone-ingestion contract: a
-    fully REPLAYED batch (restart after the state committed) has
-    ``max(doc_id) <=`` the state's high-water mark and is skipped
-    idempotently; a PARTIALLY overlapping batch (ids straddling the
-    mark) is a contract violation and raises, because re-applying half
-    a batch would double-append band/gram rows. A crash INSIDE the
-    multi-file write sequence REPAIRS on replay instead of corrupting:
-    :meth:`CurationState.update` brackets its writes with a driver-side
-    ``pending`` marker (written before the first substrate write,
-    cleared after the meta stamp), and a replay that finds a matching
-    marker runs in repair mode — landed-but-unstamped rows are dropped
-    from every loaded substrate (ids beyond the meta stamp for
-    doc-keyed logs, the ``src`` stamps for hashes/tombstones, the
-    DedupIndex rollback for the index half), appends are anti-join
-    guarded so nothing lands twice, and the contam swap's
-    between-renames window is recovered from its surviving complete
-    copy. The replayed absorb converges to exactly the clean-absorb
-    state regardless of which prefix of the writes the crash preserved
-    (test-asserted across the crash windows). A crash after the meta
-    stamp but before the marker clear leaves a stale marker, which the
-    replay's skip path removes here."""
+    A crash INSIDE the multi-file write sequence REPAIRS on replay:
+    :meth:`CurationState.update` brackets its writes with a
+    driver-side ``pending`` marker (written before the first substrate
+    write, cleared after the meta stamp), and a replay that finds a
+    matching marker runs in repair mode (see its docstring). A crash
+    after the meta stamp but before the marker clear leaves a stale
+    marker, which the replay's skip path removes here."""
 
     def absorb(batch_df: DataFrame, batch_id: int) -> None:
         st = CurationState.load(spark, state_path)
-        b = batch_df.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).first()
-        if b["hi"] is None:
-            return  # empty batch
-        if b["hi"] <= st.meta["max_doc_id"]:
-            # fully-replayed batch — already absorbed; a marker match
-            # means the previous run crashed between the meta stamp
-            # and the marker clear: finish that cleanup
+
+        def clear_stale_marker(b) -> None:
+            # the previous run crashed between the meta stamp and the
+            # marker clear: finish that cleanup
             pend = st._read_pending()
             if pend is not None and (
                 int(pend["lo"]),
                 int(pend["hi"]),
             ) == (int(b["lo"]), int(b["hi"])):
                 st._clear_pending()
-            return
-        st.update(batch_df)
+
+        b = storage.monotone_batch(
+            batch_df, "doc_id", st.meta["max_doc_id"],
+            "incremental.foreach_batch_update", on_replay=clear_stale_marker,
+        )
+        if b is not None:
+            st.update(batch_df)
 
     return absorb
 
 
 def foreach_batch_retract(spark: SparkSession, state_path: str):
     """Structured-Streaming DELETION absorber for a saved curation
-    state — the pipeline member of the ``foreach_batch_retract``
-    family: a ``(batch_df, batch_id) -> None`` function for
-    ``writeStream.foreachBatch`` that retracts each micro-batch of
-    doc ids (first column, castable to long) as one
-    :meth:`CurationState.retract` sequence. At-least-once safety is
-    the retraction-sequence protocol itself: a fully REPLAYED batch
-    finds its ids committed in the root ledger and skips
-    idempotently; a crash inside the write sequence leaves
-    uncommitted ledger rows whose same-ids replay repairs and
-    re-lands; a batch PARTIALLY overlapping committed retractions
-    raises (re-deriving against half-retracted state), so a deletion
-    feed must keep batch boundaries stable across restarts — exactly
-    the contract the per-family absorbers document
-    (streamed == one-batch equality is test-asserted in
-    tests/test_retraction_absorbers.py)."""
+    state: each micro-batch of doc ids (first column, castable to
+    long) lands as one :meth:`CurationState.retract` sequence. The
+    retraction-sequence protocol itself carries the at-least-once
+    absorb contract of :mod:`.storage`: a replayed batch finds its ids
+    committed in the root ledger and skips, a crash inside the write
+    sequence re-lands on the same-ids replay, and a batch PARTIALLY
+    overlapping committed retractions raises — so a deletion feed must
+    keep batch boundaries stable across restarts (streamed == one-batch
+    equality is test-asserted in tests/test_retraction_absorbers.py)."""
 
     def absorb(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.limit(1).count() == 0:
@@ -243,13 +224,13 @@ class CurationState:
     # ------------------------------------------------------------- views
 
     def _has_ledger(self) -> bool:
-        return T._parquet_dir_exists(f"{self._path}/retracted")
+        return storage.parquet_dir_exists(f"{self._path}/retracted")
 
     def _root_ledger(self) -> DataFrame:
         """The pipeline retraction ledger (doc_id, rseq) — rows beyond
         meta's committed ``n_retractions`` belong to an in-flight or
         torn :meth:`retract`."""
-        return T._read_parquet_pinned(self._spark, f"{self._path}/retracted")
+        return storage.read_parquet_pinned(self._spark, f"{self._path}/retracted")
 
     def _committed_retracted(self) -> DataFrame | None:
         """Committed retracted doc ids, or None when the state has no
@@ -271,7 +252,7 @@ class CurationState:
         :meth:`compact` resolves them — one broadcast anti-join, paid
         only when a ledger exists)."""
         self._refuse_if_as_of("indexed")
-        df = T._read_parquet_pinned(self._spark, f"{self._path}/indexed")
+        df = storage.read_parquet_pinned(self._spark, f"{self._path}/indexed")
         t = self._committed_retracted()
         if t is not None:
             df = df.join(F.broadcast(t), "doc_id", "left_anti")
@@ -402,7 +383,7 @@ class CurationState:
             nc,
             int(m["n_working"]),
         )
-        T._append_control_parquet(
+        storage.append_control_parquet(
             f"{self._path}/manifest",
             [row],
             _MANIFEST_SCHEMA,
@@ -419,7 +400,7 @@ class CurationState:
         saved before round 11 has no manifest directory and yields the
         empty frame (history starts at its next commit)."""
         m = self.meta
-        if not T._parquet_dir_exists(f"{self._path}/manifest"):
+        if not storage.parquet_dir_exists(f"{self._path}/manifest"):
             return self._spark.createDataFrame([], _MANIFEST_SCHEMA)
         return (
             self._spark.read.schema(_MANIFEST_SCHEMA)
@@ -519,19 +500,19 @@ class CurationState:
     # replayed first (raised loudly).
 
     def _read_pending(self) -> dict | None:
-        if not T._parquet_dir_exists(f"{self._path}/pending"):
+        if not storage.parquet_dir_exists(f"{self._path}/pending"):
             return None
-        return T._read_control_row(f"{self._path}/pending")
+        return storage.read_control_row(f"{self._path}/pending")
 
     def _write_pending(self, lo: int, hi: int) -> None:
-        T._write_control_parquet(
+        storage.write_control_parquet(
             f"{self._path}/pending", [(int(lo), int(hi))], _PENDING_SCHEMA
         )
 
     def _clear_pending(self) -> None:
         import shutil
 
-        shutil.rmtree(T._local_path(f"{self._path}/pending"), ignore_errors=True)
+        shutil.rmtree(storage.local_path(f"{self._path}/pending"), ignore_errors=True)
 
     def check(self, *, index_stages: bool = True, cooccupancy: bool = True) -> dict:
         """Integrity probe for the multi-file state — the operational
@@ -582,10 +563,10 @@ class CurationState:
         # directory — the probe must REPORT that, not crash on the
         # read (it exists for post-crash triage); recovery is one
         # rename of a surviving complete copy
-        # (textops._recover_swapped_dir)
+        # (storage.recover_swapped_dir)
         for sub in ("indexed", "hashes", "working", "grams", "contam",
                     "tombstones"):
-            if not T._parquet_dir_exists(f"{p}/{sub}"):
+            if not storage.parquet_dir_exists(f"{p}/{sub}"):
                 bad(f"substrate_missing_{sub}", 1)
         if v and any(k.startswith("substrate_missing_") for k in v):
             return {"ok": False, "violations": v}
@@ -700,7 +681,7 @@ class CurationState:
         # pairs share a band bucket, verified ⊆ pairs, and the verified
         # cluster labels name verified-pair endpoints only
         idx_path = f"{p}/index"
-        if index_stages and T._parquet_dir_exists(f"{idx_path}/bands"):
+        if index_stages and storage.parquet_dir_exists(f"{idx_path}/bands"):
             bands = spark.read.parquet(f"{idx_path}/bands")
             if dead_src is not None:
                 # index rows of retracted docs stay physical until
@@ -727,7 +708,7 @@ class CurationState:
             # torn write can leave pairs/verified absent — the probe
             # must REPORT that, not crash on the read (it exists for
             # post-crash triage)
-            if not T._parquet_dir_exists(f"{idx_path}/pairs"):
+            if not storage.parquet_dir_exists(f"{idx_path}/pairs"):
                 bad("index_stage_missing_pairs", 1)
                 return {"ok": not v, "violations": v}
             pairs = spark.read.parquet(f"{idx_path}/pairs")
@@ -758,7 +739,7 @@ class CurationState:
                     "pairs_not_cooccupant",
                     pairs.join(cooc, ["id_a", "id_b"], "left_anti").count(),
                 )
-            if not T._parquet_dir_exists(f"{idx_path}/verified"):
+            if not storage.parquet_dir_exists(f"{idx_path}/verified"):
                 bad("index_stage_missing_verified", 1)
                 return {"ok": not v, "violations": v}
             verified = spark.read.parquet(f"{idx_path}/verified")
@@ -777,7 +758,7 @@ class CurationState:
                 .join(pairs, ["id_a", "id_b"], "left_anti")
                 .count(),
             )
-            if T._parquet_dir_exists(f"{idx_path}/verified_clusters"):
+            if storage.parquet_dir_exists(f"{idx_path}/verified_clusters"):
                 vc_ids = (
                     spark.read.parquet(f"{idx_path}/verified_clusters")
                     .select("id")
@@ -870,7 +851,7 @@ class CurationState:
         spark, p = self._spark, self._path
         out: dict[str, dict] = {}
         has_led = self._has_ledger()
-        out["working"] = T._rewrite_parquet_dir(
+        out["working"] = storage.rewrite_parquet_dir(
             spark,
             f"{p}/working",
             self.working().withColumn(
@@ -887,18 +868,18 @@ class CurationState:
                 "left_anti",
             )
         )
-        out["grams"] = T._rewrite_parquet_dir(
+        out["grams"] = storage.rewrite_parquet_dir(
             spark, f"{p}/grams", live_grams, target_rows_per_file
         )
         # tombstones (and resurrection records) resolved into
         # working/grams above — clear the log
-        T._write_control_parquet(f"{p}/tombstones", [], _TOMB_SCHEMA)
+        storage.write_control_parquet(f"{p}/tombstones", [], _TOMB_SCHEMA)
         out["tombstones"] = {"rows": 0, "files_before": None, "files_after": None}
         # indexed resolves committed retractions physically; hashes is
         # recomputed from the live indexed set when a ledger exists
         # (this also retires legacy NULL-src_id hash rows of retracted
         # texts — the one suppression the view filter cannot lift)
-        out["indexed"] = T._rewrite_parquet_dir(
+        out["indexed"] = storage.rewrite_parquet_dir(
             spark, f"{p}/indexed", self.indexed(), target_rows_per_file
         )
         hashes_frame = (
@@ -908,22 +889,22 @@ class CurationState:
             if has_led
             else spark.read.parquet(f"{p}/hashes")
         )
-        out["hashes"] = T._rewrite_parquet_dir(
+        out["hashes"] = storage.rewrite_parquet_dir(
             spark, f"{p}/hashes", hashes_frame, target_rows_per_file
         )
         if has_led:
             # re-lay and RETAIN the ledger: retract()'s idempotent-
             # replay detection and update's reuse refusal key on it
-            out["retracted"] = T._rewrite_parquet_dir(
+            out["retracted"] = storage.rewrite_parquet_dir(
                 spark,
                 f"{p}/retracted",
                 self._root_ledger(),
                 target_rows_per_file,
             )
-            T._stamp_resolved_retractions(
+            storage.stamp_resolved_retractions(
                 p, int(self.meta.get("n_retractions") or 0)
             )
-        out["contam"] = T._rewrite_parquet_dir(
+        out["contam"] = storage.rewrite_parquet_dir(
             spark, f"{p}/contam", self.contamination(), target_rows_per_file
         )
         out["index"] = T.DedupIndex.compact(
@@ -951,7 +932,7 @@ class CurationState:
         check is a driver-side file listing — no Spark job)."""
         subs = ("indexed", "hashes", "working", "tombstones", "grams",
                 "contam", "index/bands", "index/pairs", "index/verified")
-        worst = max(T._count_data_files(f"{self._path}/{s}") for s in subs)
+        worst = max(storage.count_data_files(f"{self._path}/{s}") for s in subs)
         if worst <= max_files_per_substrate:
             return None
         return self.compact(target_rows_per_file=target_rows_per_file)
@@ -1041,7 +1022,7 @@ class CurationState:
                 max_doc_id = f_max.result()
         else:
             indexed.write.mode("overwrite").parquet(f"{path}/indexed")
-        indexed = T._read_parquet_pinned(spark, f"{path}/indexed")
+        indexed = storage.read_parquet_pinned(spark, f"{path}/indexed")
         idx = T.DedupIndex(
             indexed,
             "text",
@@ -1094,8 +1075,8 @@ class CurationState:
                 pool.submit(_working),
             ]:
                 fut.result()
-        working = T._read_parquet_pinned(spark, f"{path}/working")
-        T._write_control_parquet(f"{path}/tombstones", [], _TOMB_SCHEMA)
+        working = storage.read_parquet_pinned(spark, f"{path}/working")
+        storage.write_control_parquet(f"{path}/tombstones", [], _TOMB_SCHEMA)
         wrow_acc: dict = {}
 
         def _grams() -> None:
@@ -1130,7 +1111,7 @@ class CurationState:
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "CurationState":
-        meta = T._read_control_row(f"{path}/meta")
+        meta = storage.read_control_row(f"{path}/meta")
         # states saved before the compaction lifecycle existed have no
         # n_compactions column; default it so the next _write_meta
         # (update/compact) doesn't KeyError mid-lifecycle
@@ -1147,7 +1128,7 @@ class CurationState:
     def _write_meta(self) -> None:
         m = self.meta
         vals = tuple(m[f.split(" ")[0]] for f in _META_SCHEMA.split(", "))
-        T._write_control_parquet(f"{self._path}/meta", [vals], _META_SCHEMA)
+        storage.write_control_parquet(f"{self._path}/meta", [vals], _META_SCHEMA)
 
     # ------------------------------------------------------ stage pieces
 
@@ -1365,7 +1346,7 @@ class CurationState:
             repair = True
             # the one non-append write is the contam swap — recover the
             # between-renames crash window before reading it
-            T._recover_swapped_dir(f"{p}/contam")
+            storage.recover_swapped_dir(f"{p}/contam")
         if not repair:
             # on a repair replay the on-disk marker already holds these
             # exact bounds — rewriting it would reopen the two-rename
@@ -1816,7 +1797,7 @@ class CurationState:
             # at entry); the fused metrics job already counted the
             # checkpointed frame, so the swap costs exactly the one
             # write job the old bare overwrite did
-            lambda: T._rewrite_parquet_dir(
+            lambda: storage.rewrite_parquet_dir(
                 spark, f"{p}/contam", contam_final, 1 << 20, n_rows=n_pairs_after
             ),
         )
@@ -1952,8 +1933,8 @@ class CurationState:
             )
         led_path = f"{p}/retracted"
         repair = False
-        if T._parquet_dir_exists(led_path):
-            T._recover_swapped_dir(led_path)
+        if storage.parquet_dir_exists(led_path):
+            storage.recover_swapped_dir(led_path)
             led = self._root_ledger()
             unc = led.filter(F.col("rseq") > n_r).select("doc_id").distinct()
             if unc.limit(1).count():
@@ -1982,7 +1963,7 @@ class CurationState:
         if repair:
             # the one non-append write is the contam swap — recover the
             # between-renames crash window before reading it
-            T._recover_swapped_dir(f"{p}/contam")
+            storage.recover_swapped_dir(f"{p}/contam")
 
         # ---- derivation (committed views throughout; every frame
         #      below is replay-deterministic, which is what makes the
@@ -1993,7 +1974,7 @@ class CurationState:
         # including THIS one's on a repair replay after the index half
         # committed — so the neighbor set reads raw and filters only
         # the retractions committed BEFORE this op
-        raw_v = T._read_parquet_pinned(spark, f"{p}/index/verified").select(
+        raw_v = storage.read_parquet_pinned(spark, f"{p}/index/verified").select(
             "id_a", "id_b"
         )
         if prior is not None:
@@ -2371,7 +2352,7 @@ class CurationState:
                 g_add_new, "grams", ["id", "g"],
                 spark.read.schema(_GRAM_SCHEMA).parquet(f"{p}/grams"),
             ),
-            lambda: T._rewrite_parquet_dir(
+            lambda: storage.rewrite_parquet_dir(
                 spark, f"{p}/contam", contam_final, 1 << 20,
                 n_rows=n_pairs_after,
             ),

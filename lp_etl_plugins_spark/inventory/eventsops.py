@@ -91,9 +91,8 @@ GROUP BY user_id, session_id
 
 def e4_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the custom stateful operator
-    (streaming.stateful_user_totals — transformWithStateInPandas where
-    available, applyInPandasWithState fallback); the cross-micro-batch
-    state behavior is asserted against this in
+    (streaming.stateful_user_totals on applyInPandasWithState); the
+    cross-micro-batch state behavior is asserted against this in
     tests/test_streaming.py."""
     return user_totals(load_table(spark, sf_dir, "events"))
 
@@ -683,9 +682,8 @@ GROUP BY 1, 2
 
 def e13_session_timeout_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the TIMER-based stateful operator
-    (streaming.session_timeout_summaries — transformWithStateInPandas
-    EventTime timers where available, applyInPandasWithState
-    EventTimeTimeout fallback): a user's session summary is emitted
+    (streaming.session_timeout_summaries on applyInPandasWithState
+    with EventTimeTimeout): a user's session summary is emitted
     when no event arrives for 6 h. Batch form is gaps-and-islands on
     FLOORED epoch seconds (both engines; break iff gap ≥ 21600,
     session end exclusive — e3's convention), so the stream, the

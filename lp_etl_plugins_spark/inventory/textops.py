@@ -1928,7 +1928,7 @@ def t36_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     not by data volume (the same run on 10x the rows costs nearly the
     same — measured). Round 7 halved that fixed cost (~30 s → ~13 s
     warm at sf0.1) by fixing the control-plane writes themselves
-    (textops._single_partition_df: 1-slice meta/log frames instead of
+    (storage.single_partition_df: 1-slice meta/log frames instead of
     coalesce(1) over defaultParallelism Python slices — semantics
     unchanged, same single output file). The slice deliberately stays
     at %8 rather than shrinking further: at the driver's sf0.01 the

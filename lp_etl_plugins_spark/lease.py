@@ -5,7 +5,7 @@ absorbers' redo machinery reconstructs from an arbitrary landed subset
 of its OWN writes, but nothing stopped ``maintenance.vacuum``'s
 rename-aside compaction from racing a concurrent
 ``append_saved``/``foreach_batch_*`` on the same directory — an append
-landing between :func:`textops._rewrite_parquet_dir`'s temp-write and
+landing between :func:`storage.rewrite_parquet_dir`'s temp-write and
 its swap is deleted with the ``.__old__`` directory, silently losing
 rows (the two-thread test in ``tests/test_lease.py`` demonstrates
 exactly that loss without the lease). A real nightly deployment runs
@@ -55,6 +55,8 @@ import os
 import threading
 import time
 from contextlib import contextmanager
+
+from . import storage
 
 
 class LeaseContention(RuntimeError):
@@ -389,9 +391,7 @@ _ACQUIRE_LOCK = threading.Lock()
 
 
 def _lease_file(path: str) -> str:
-    from .textops import _local_path
-
-    return _local_path(path).rstrip("/") + ".__lease__"
+    return storage.local_path(path).rstrip("/") + ".__lease__"
 
 
 @contextmanager

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import storage
 from . import textops as T
 
 _FAMILY_MARKERS = (
@@ -53,7 +54,7 @@ def detect_family(path: str) -> str | None:
     missing substrate, not shrug it off as unknown."""
     def present(m: str) -> bool:
         return any(
-            T._parquet_dir_exists(f"{path}/{m}{suffix}")
+            storage.parquet_dir_exists(f"{path}/{m}{suffix}")
             for suffix in (
                 "", ".__old__", ".__compact__",
                 # a VectorIndex coarse-quantizer retrain caught between
@@ -94,14 +95,14 @@ def check_dedup_index(spark: SparkSession, path: str) -> dict:
     reported (the torn-retraction signal)."""
     v: dict[str, int] = {}
     has = {
-        s: T._parquet_dir_exists(f"{path}/{s}") for s in T.DedupIndex._STAGES
+        s: storage.parquet_dir_exists(f"{path}/{s}") for s in T.DedupIndex._STAGES
     }
     tombs = None
-    if T._parquet_dir_exists(f"{path}/retracted"):
+    if storage.parquet_dir_exists(f"{path}/retracted"):
         n_retr = 0
-        if T._parquet_dir_exists(f"{path}/meta"):
+        if storage.parquet_dir_exists(f"{path}/meta"):
             n_retr = int(
-                T._read_control_row(f"{path}/meta").get("n_retractions") or 0
+                storage.read_control_row(f"{path}/meta").get("n_retractions") or 0
             )
         led = spark.read.parquet(f"{path}/retracted")
         _bad(
@@ -197,7 +198,7 @@ def check_vector_index(
     from .vectorops import VectorIndex
 
     v: dict[str, int] = {}
-    if T._parquet_dir_exists(f"{path}/{VectorIndex._RETRAIN_MARKER}"):
+    if storage.parquet_dir_exists(f"{path}/{VectorIndex._RETRAIN_MARKER}"):
         # a committed-but-unfinished coarse retrain: stages may span
         # two quantizer generations, so cross-stage probes over the
         # mix would be meaningless — report the torn state (the repair
@@ -205,17 +206,17 @@ def check_vector_index(
         _bad(v, "retrain_pending", 1)
         return {"ok": False, "violations": v}
     missing = [
-        s for s in VectorIndex._STAGES if not T._parquet_dir_exists(f"{path}/{s}")
+        s for s in VectorIndex._STAGES if not storage.parquet_dir_exists(f"{path}/{s}")
     ]
     for s in missing:
         _bad(v, f"stage_missing_{s}", 1)
     if missing:
         return {"ok": False, "violations": v}
-    m = T._read_control_row(f"{path}/meta")
+    m = storage.read_control_row(f"{path}/meta")
     lists = spark.read.parquet(f"{path}/corpus_lists")
     codes = spark.read.parquet(f"{path}/codes")
     tombs = None
-    if T._parquet_dir_exists(f"{path}/tombstones"):
+    if storage.parquet_dir_exists(f"{path}/tombstones"):
         t = spark.read.parquet(f"{path}/tombstones").select("id").distinct()
         if t.first() is not None:
             tombs = t
@@ -275,13 +276,13 @@ def check_repeat_index(spark: SparkSession, path: str) -> dict:
     missing = [
         s
         for s in ("postings", "spans")
-        if not T._parquet_dir_exists(f"{path}/{s}")
+        if not storage.parquet_dir_exists(f"{path}/{s}")
     ]
     for s in missing:
         _bad(v, f"stage_missing_{s}", 1)
     if missing:
         return {"ok": False, "violations": v}
-    m = T._read_control_row(f"{path}/meta")
+    m = storage.read_control_row(f"{path}/meta")
     postings = spark.read.parquet(f"{path}/postings")
     spans = spark.read.parquet(f"{path}/spans")
     hi = int(m["max_doc_id"])
@@ -299,7 +300,7 @@ def check_repeat_index(spark: SparkSession, path: str) -> dict:
         .join(postings.select("id"), "id", "left_anti")
         .count(),
     )
-    if T._parquet_dir_exists(f"{path}/retracted"):
+    if storage.parquet_dir_exists(f"{path}/retracted"):
         n_retr = int(m.get("n_retractions") or 0)
         led = spark.read.parquet(f"{path}/retracted")
         _bad(
@@ -316,7 +317,7 @@ def check_repeat_index(spark: SparkSession, path: str) -> dict:
         )
     if (
         m.get("counts_seg") is not None
-        and T._parquet_dir_exists(f"{path}/gram_counts")
+        and storage.parquet_dir_exists(f"{path}/gram_counts")
     ):
         # counts-substrate probes (round 10): structural invariants as
         # one aggregate each; a full recount equals a postings scan —
@@ -352,17 +353,17 @@ def check_media_index(spark: SparkSession, path: str) -> dict:
 
     v: dict[str, int] = {}
     missing = [
-        s for s in MediaIndex._STAGES if not T._parquet_dir_exists(f"{path}/{s}")
+        s for s in MediaIndex._STAGES if not storage.parquet_dir_exists(f"{path}/{s}")
     ]
     for s in missing:
         _bad(v, f"stage_missing_{s}", 1)
     if missing:
         return {"ok": False, "violations": v}
-    m = T._read_control_row(f"{path}/meta")
+    m = storage.read_control_row(f"{path}/meta")
     ph = spark.read.parquet(f"{path}/phash")
     pairs = spark.read.parquet(f"{path}/pairs")
     clusters = spark.read.parquet(f"{path}/clusters")
-    if T._parquet_dir_exists(f"{path}/retracted"):
+    if storage.parquet_dir_exists(f"{path}/retracted"):
         # cross-stage checks run over the LIVE view (rows minus
         # committed tombstones) — consistent before, during, and after
         # compact()'s physical resolution; uncommitted ledger rows are
@@ -435,15 +436,15 @@ def check_trigram_lm(spark: SparkSession, path: str) -> dict:
     (the double-subtraction signature), and ledger rows within the
     committed retraction sequence."""
     v: dict[str, int] = {}
-    if not T._parquet_dir_exists(f"{path}/counts"):
+    if not storage.parquet_dir_exists(f"{path}/counts"):
         _bad(v, "stage_missing_counts", 1)
         return {"ok": False, "violations": v}
     from .textops import TrigramLM
 
     counts = TrigramLM._raw_counts(spark, path)
     stamp, n_retr = None, 0
-    if T._parquet_dir_exists(f"{path}/meta"):
-        m = T._read_control_row(f"{path}/meta")
+    if storage.parquet_dir_exists(f"{path}/meta"):
+        m = storage.read_control_row(f"{path}/meta")
         stamp = m.get("max_id")
         n_retr = int(m.get("n_retractions") or 0)
     row = counts.agg(
@@ -478,7 +479,7 @@ def check_trigram_lm(spark: SparkSession, path: str) -> dict:
     _bad(v, "duplicate_gram_rows", int(row["n"]) - int(row["d"]))
     if stamp is not None:
         _bad(v, "uncommitted_segment_rows", int(row["unstamped"] or 0))
-        if n_retr or T._parquet_dir_exists(f"{path}/retracted"):
+        if n_retr or storage.parquet_dir_exists(f"{path}/retracted"):
             merged = TrigramLM._committed(counts, stamp, n_retr).groupBy(
                 "g"
             ).agg(F.sum("c").alias("c"))
@@ -487,7 +488,7 @@ def check_trigram_lm(spark: SparkSession, path: str) -> dict:
                 "negative_merged_counts",
                 merged.filter(F.col("c") < 0).count(),
             )
-    if T._parquet_dir_exists(f"{path}/retracted"):
+    if storage.parquet_dir_exists(f"{path}/retracted"):
         led = spark.read.parquet(f"{path}/retracted")
         _bad(
             v,
@@ -538,29 +539,23 @@ def _purge_torn_retraction(
     mid-protocol. The lost retraction was never acknowledged upstream
     (its meta commit is what acknowledges), so an at-least-once
     deletion feed re-sends it. Returns True when something was purged."""
-    from .textops import (
-        DedupIndex,
-        TrigramLM,
-        _parquet_dir_exists,
-        _read_control_row,
-        _rewrite_parquet_dir,
-    )
+    from .textops import DedupIndex, TrigramLM
 
     led_path = f"{path}/retracted"
     if family == "CurationState":
         return _complete_torn_pipeline_retraction(spark, path)
     if family not in (
         "DedupIndex", "MediaIndex", "RepeatIndex", "TrigramLM"
-    ) or not _parquet_dir_exists(led_path):
+    ) or not storage.parquet_dir_exists(led_path):
         # VectorIndex's single-append protocol has no uncommitted
         # representation
         return False
-    if not _parquet_dir_exists(f"{path}/meta"):
+    if not storage.parquet_dir_exists(f"{path}/meta"):
         # the meta is mid-swap (or the state is torn beyond this
         # repair's scope) — report-only sweeps must not crash here;
         # recover_swaps renames the meta back first
         return False
-    m = _read_control_row(f"{path}/meta")
+    m = storage.read_control_row(f"{path}/meta")
     n_r = int(m.get("n_retractions") or 0)
     led = spark.read.parquet(led_path)
     if not led.filter(F.col("rseq") > n_r).limit(1).count():
@@ -577,7 +572,7 @@ def _purge_torn_retraction(
     # repair.
     if family == "TrigramLM":
         raw = TrigramLM._raw_counts(spark, path)
-        _rewrite_parquet_dir(
+        storage.rewrite_parquet_dir(
             spark,
             f"{path}/counts",
             raw.filter(
@@ -591,7 +586,7 @@ def _purge_torn_retraction(
         # span generations before re-landing — so every gen beyond the
         # committed counter belongs to the abandoned retraction
         n_u = int(m["n_updates"])
-        _rewrite_parquet_dir(
+        storage.rewrite_parquet_dir(
             spark,
             f"{path}/spans",
             spark.read.parquet(f"{path}/spans").filter(
@@ -620,7 +615,7 @@ def _purge_torn_retraction(
                 ("clusters", idx._pairs),
                 ("verified_clusters", idx._verified),
             ):
-                if edges is not None and _parquet_dir_exists(
+                if edges is not None and storage.parquet_dir_exists(
                     f"{path}/{stage}"
                 ):
                     lbl = connected_components(
@@ -633,7 +628,7 @@ def _purge_torn_retraction(
                     idx._pairs.select("id_a", "id_b")
                 ).localCheckpoint()
                 lbl.write.mode("overwrite").parquet(f"{path}/clusters")
-    _rewrite_parquet_dir(
+    storage.rewrite_parquet_dir(
         spark, led_path, led.filter(F.col("rseq") <= n_r), 1 << 20
     )
     return True
@@ -658,10 +653,8 @@ def _complete_torn_pipeline_retraction(spark: SparkSession, path: str) -> bool:
     converge to DELETED. Caller holds the root lease; the replay's
     inner index lease is a distinct scope."""
     from .incremental import CurationState
-    from .textops import _parquet_dir_exists
-
     led_path = f"{path}/retracted"
-    if not _parquet_dir_exists(led_path) or not _parquet_dir_exists(
+    if not storage.parquet_dir_exists(led_path) or not storage.parquet_dir_exists(
         f"{path}/meta"
     ):
         return False
@@ -723,7 +716,7 @@ def _stage_dirs(path: str, family: str, existing_only: bool = True) -> list[str]
     return [
         f"{path}/{s}"
         for s in subs
-        if not existing_only or T._parquet_dir_exists(f"{path}/{s}")
+        if not existing_only or storage.parquet_dir_exists(f"{path}/{s}")
     ]
 
 
@@ -750,7 +743,7 @@ def _tombstone_pressure(
     fast path: absence means the read plans carry no anti-join at
     all, so there is nothing to compact away)."""
     led, prim = _TOMBSTONE_LEDGER[family]
-    if not T._parquet_dir_exists(f"{path}/{led}"):
+    if not storage.parquet_dir_exists(f"{path}/{led}"):
         return None
     led_df = spark.read.parquet(f"{path}/{led}")
     if family != "VectorIndex":
@@ -763,21 +756,21 @@ def _tombstone_pressure(
         # committed counter so a stale stamp from a previous state
         # incarnation (sequence restart at save) can't hide live rows.
         resolved = 0
-        if T._parquet_dir_exists(f"{path}/retracted_resolved"):
+        if storage.parquet_dir_exists(f"{path}/retracted_resolved"):
             resolved = int(
-                T._read_control_row(f"{path}/retracted_resolved")[
+                storage.read_control_row(f"{path}/retracted_resolved")[
                     "resolved_rseq"
                 ]
                 or 0
             )
         n_committed = int(
-            T._read_control_row(f"{path}/meta").get("n_retractions") or 0
+            storage.read_control_row(f"{path}/meta").get("n_retractions") or 0
         )
         led_df = led_df.filter(F.col("rseq") > min(resolved, n_committed))
     n_led = led_df.count()
     if not n_led:
         return None
-    if not T._parquet_dir_exists(f"{path}/{prim}"):
+    if not storage.parquet_dir_exists(f"{path}/{prim}"):
         return None
     n_prim = spark.read.parquet(f"{path}/{prim}").count()
     return n_led / max(n_prim, 1)
@@ -794,12 +787,12 @@ def _recover_family_swaps(path: str, family: str) -> int:
 
     n = 0
     for d in _stage_candidates(path, family):
-        local = T._local_path(d)
+        local = storage.local_path(d)
         if not os.path.isdir(local) and (
             os.path.isdir(local + ".__compact__")
             or os.path.isdir(local + ".__old__")
         ):
-            T._recover_swapped_dir(d)
+            storage.recover_swapped_dir(d)
             n += 1
     return n
 
@@ -868,7 +861,7 @@ def vacuum(
     mechanical repair the probes otherwise only report: a substrate
     caught between a rename-aside swap's two renames (no live
     directory, a complete copy beside it) is recovered with
-    :func:`textops._recover_swapped_dir`'s single rename — under the
+    :func:`storage.recover_swapped_dir`'s single rename — under the
     directory lease, so a concurrent writer is never raced — and the
     probe re-runs over the recovered state. Only the unambiguous
     rename window is auto-repaired; torn APPENDS stay report-only
@@ -982,7 +975,7 @@ def vacuum(
                     recovered += _recover_family_swaps(path, family)
             except LeaseContention:
                 pass  # a live writer owns the path; its replay repairs
-        if not T._parquet_dir_exists(f"{path}/meta"):
+        if not storage.parquet_dir_exists(f"{path}/meta"):
             # the meta itself is mid-swap (family detected from its
             # surviving copy) — the probe would crash reading it;
             # report instead (recover_swaps=True renames it back)
@@ -1052,10 +1045,10 @@ def vacuum(
             # vectors land (the stamp goes stale), instead of paying
             # it every sweep forever (round-10 review find)
             suppress_marker = f"{path}/{VectorIndex._RETRAIN_SUPPRESS}"
-            cur_hi = T._read_control_row(f"{path}/meta").get("max_id")
+            cur_hi = storage.read_control_row(f"{path}/meta").get("max_id")
             suppressed = False
-            if corpus is not None and T._parquet_dir_exists(suppress_marker):
-                prior = T._read_control_row(suppress_marker).get("max_id")
+            if corpus is not None and storage.parquet_dir_exists(suppress_marker):
+                prior = storage.read_control_row(suppress_marker).get("max_id")
                 # a legacy meta has no high-water mark — prior and cur
                 # are BOTH None, which is identity of ignorance, not
                 # evidence the geometry is unchanged; never suppress on
@@ -1085,15 +1078,15 @@ def vacuum(
                             in res["violations"]
                         )
                         if retrain_ineffective:
-                            T._write_control_parquet(
+                            storage.write_control_parquet(
                                 suppress_marker,
                                 [(None if cur_hi is None else int(cur_hi),)],
                                 "max_id bigint",
                             )
-                        elif T._parquet_dir_exists(suppress_marker):
+                        elif storage.parquet_dir_exists(suppress_marker):
                             import shutil
 
-                            shutil.rmtree(T._local_path(suppress_marker))
+                            shutil.rmtree(storage.local_path(suppress_marker))
                 except LeaseContention:
                     pass  # a live writer owns the path; next sweep retrains
         viol = ";".join(f"{k}={n}" for k, n in sorted(res["violations"].items()))
@@ -1110,7 +1103,7 @@ def vacuum(
         if purge_torn_retractions and not purged and repair_err:
             viol = ";".join(filter(None, [viol, repair_err]))
         dirs = _stage_dirs(path, family)
-        worst = max((T._count_data_files(d) for d in dirs), default=0)
+        worst = max((storage.count_data_files(d) for d in dirs), default=0)
         compacted = False
         pressure = (
             _tombstone_pressure(spark, path, family)
@@ -1151,7 +1144,7 @@ def vacuum(
                     filter(None, [viol, "compact_refused_torn_state=1"])
                 )
         worst_after = (
-            max((T._count_data_files(d) for d in dirs), default=0)
+            max((storage.count_data_files(d) for d in dirs), default=0)
             if compacted
             else worst
         )
@@ -1159,4 +1152,4 @@ def vacuum(
             (path, family, bool(res["ok"]), viol, worst, compacted,
              worst_after, recovered)
         )
-    return T._single_partition_df(spark, rows, _REPORT_SCHEMA)
+    return storage.single_partition_df(spark, rows, _REPORT_SCHEMA)

@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import storage
+
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, data binary, meta map<string,string>"
 )
@@ -1542,16 +1544,10 @@ class MediaIndex:
         self._tomb_replayed = False
 
     def _retract_saved_locked(self, path: str) -> None:
-        from .textops import (
-            _parquet_dir_exists,
-            _read_control_row,
-            _recover_swapped_dir,
-            _rewrite_parquet_dir,
-            connected_components,
-        )
+        from .textops import connected_components
 
         spark = self._tomb_delta.sparkSession
-        m = _read_control_row(f"{path}/meta")
+        m = storage.read_control_row(f"{path}/meta")
         stamp = m.get("max_id")
         if stamp is None:
             raise ValueError(
@@ -1574,8 +1570,8 @@ class MediaIndex:
         led_path = f"{path}/retracted"
         replay_torn = False
         committed_full = None
-        if _parquet_dir_exists(led_path):
-            _recover_swapped_dir(led_path)
+        if storage.parquet_dir_exists(led_path):
+            storage.recover_swapped_dir(led_path)
             led = spark.read.parquet(led_path)
             unc = led.filter(F.col("rseq") > n_r).select("id").distinct()
             if unc.limit(1).count():
@@ -1628,7 +1624,7 @@ class MediaIndex:
             # ledger rewrites LAST — one atomic swap to committed ∪
             # fresh. An earlier purge would erase the only signal
             # while torn clusters persist (the round-9 ADVICE window).
-            _rewrite_parquet_dir(
+            storage.rewrite_parquet_dir(
                 spark,
                 led_path,
                 committed_full.unionByName(fresh),
@@ -1652,23 +1648,19 @@ class MediaIndex:
             # item, but its id stays allocated
             hi = self.max_id if hi is None else max(int(hi), self.max_id)
         self.max_id = None if hi is None else int(hi)
-        from .textops import _local_path, _parquet_dir_exists
-
         if self._retracted_ids is not None:
             self._retracted_ids.select(
                 "id", F.lit(0).cast("bigint").alias("rseq")
             ).write.mode("overwrite").parquet(f"{path}/retracted")
-        elif _parquet_dir_exists(f"{path}/retracted"):
+        elif storage.parquet_dir_exists(f"{path}/retracted"):
             import shutil
 
-            shutil.rmtree(_local_path(f"{path}/retracted"))
+            shutil.rmtree(storage.local_path(f"{path}/retracted"))
         self.n_retractions = 0
         self._write_meta(path)
 
     def _write_meta(self, path: str) -> None:
-        from .textops import _write_control_parquet
-
-        _write_control_parquet(
+        storage.write_control_parquet(
             f"{path}/meta",
             [
                 (
@@ -1691,9 +1683,7 @@ class MediaIndex:
         even absorbs :meth:`update` deltas without the old corpus)."""
         idx = cls.__new__(cls)
         idx._df = None
-        from .textops import _read_control_row
-
-        m = _read_control_row(f"{path}/meta")
+        m = storage.read_control_row(f"{path}/meta")
         idx._id_col = m["id_col"]
         idx._n_bands = m["n_bands"]
         idx._max_hamming = m["max_hamming"]
@@ -1701,20 +1691,19 @@ class MediaIndex:
         idx._max_band_size = m.get("max_band_size")
         hi = m["max_id"]
         idx.max_id = None if hi is None else int(hi)
-        from .textops import _read_parquet_pinned
-
         for stage in cls._STAGES:
-            setattr(idx, f"_{stage}", _read_parquet_pinned(spark, f"{path}/{stage}"))
+            setattr(
+                idx, f"_{stage}",
+                storage.read_parquet_pinned(spark, f"{path}/{stage}"),
+            )
         idx.builds = dict.fromkeys(cls._STAGES, 0)
         idx.updates = 0
-        from .textops import _parquet_dir_exists
-
         idx.n_retractions = int(m.get("n_retractions") or 0)
         idx._retracted_ids = None
         idx._tomb_delta = None
-        if _parquet_dir_exists(f"{path}/retracted"):
+        if storage.parquet_dir_exists(f"{path}/retracted"):
             t = (
-                _read_parquet_pinned(spark, f"{path}/retracted")
+                storage.read_parquet_pinned(spark, f"{path}/retracted")
                 .filter(F.col("rseq") <= idx.n_retractions)
                 .select("id")
                 .distinct()
@@ -1775,14 +1764,12 @@ class MediaIndex:
             self._append_saved_locked(path)
 
     def _append_saved_locked(self, path: str) -> None:
-        from .textops import _parquet_dir_exists, _read_control_row
-
-        if _parquet_dir_exists(f"{path}/retracted"):
+        if storage.parquet_dir_exists(f"{path}/retracted"):
             # sync the retraction sequence so the trailing meta rewrite
             # never clobbers committed retractions; refuse to
             # interleave with a torn retraction (its replay owns the
             # purge)
-            m = _read_control_row(f"{path}/meta")
+            m = storage.read_control_row(f"{path}/meta")
             self.n_retractions = int(m.get("n_retractions") or 0)
             spark = self._delta["phash"].sparkSession
             if (
@@ -1914,19 +1901,14 @@ class MediaIndex:
         → ``{stage: {"rows", "files_before", "files_after"}}``.
         Single-writer-fenced (see :mod:`.lease`)."""
         from .lease import dir_lease
-        from .textops import (
-            TornStateError,
-            _parquet_dir_exists,
-            _read_control_row,
-            _rewrite_parquet_dir,
-        )
+        from .textops import TornStateError
 
         with dir_lease(path, role="MediaIndex.compact"):
             tombs = None
             led_path = f"{path}/retracted"
-            if _parquet_dir_exists(led_path):
+            if storage.parquet_dir_exists(led_path):
                 n_r = int(
-                    _read_control_row(f"{path}/meta").get("n_retractions")
+                    storage.read_control_row(f"{path}/meta").get("n_retractions")
                     or 0
                 )
                 led = spark.read.parquet(led_path)
@@ -1959,66 +1941,41 @@ class MediaIndex:
                         "id_b",
                         "left_anti",
                     ).select(*cols)
-                out[stage] = _rewrite_parquet_dir(
+                out[stage] = storage.rewrite_parquet_dir(
                     spark, f"{path}/{stage}", df, target_rows_per_file
                 )
-            if _parquet_dir_exists(led_path):
-                out["retracted"] = _rewrite_parquet_dir(
+            if storage.parquet_dir_exists(led_path):
+                out["retracted"] = storage.rewrite_parquet_dir(
                     spark,
                     led_path,
                     spark.read.parquet(led_path),
                     target_rows_per_file,
                 )
-                from .textops import _stamp_resolved_retractions
-
-                _stamp_resolved_retractions(path, n_r)
+                storage.stamp_resolved_retractions(path, n_r)
             return out
 
 
 def foreach_batch_add(spark: SparkSession, index_path: str):
-    """Structured-Streaming ingestion into a saved media index: a
-    ``(batch_df, batch_id) -> None`` function for
-    ``writeStream.foreachBatch`` that absorbs each micro-batch as one
-    frozen-params :meth:`MediaIndex.update` + O(delta)
-    :meth:`MediaIndex.append_saved` — the media member of the
-    streaming-absorber family (`incremental.foreach_batch_update`,
-    `vectorops.foreach_batch_add`,
-    `textops.RepeatIndex.foreach_batch_update`). Because the phash
-    stage is content-complete, the absorber needs no corpus log at
-    all — the one absorber in the family with a single directory to
-    maintain.
+    """Structured-Streaming ingestion into a saved media index: each
+    micro-batch lands as one frozen-params :meth:`MediaIndex.update` +
+    O(delta) :meth:`MediaIndex.append_saved`, under the at-least-once
+    absorb contract of :mod:`.storage` (``max_id`` is the high-water
+    mark). Because the phash stage is content-complete, the absorber
+    needs no corpus log at all.
 
-    At-least-once safety is the family's monotone-id contract plus
-    the DISK-side guard the vector absorber carries: meta's
-    ``max_id`` is the high-water mark, a fully replayed batch is
-    skipped idempotently, a straddling batch raises, and rows found
-    ABOVE the stamp mean a prior append landed without its meta
-    rewrite — repaired by re-stamping when the batch is fully present
-    (exact phash row count), raised on a torn partial append, never
-    re-appended."""
+    Like the vector absorber, the append seam is disk-guarded: hash
+    rows found ABOVE the stamp mean a prior append landed without its
+    meta rewrite — repaired by :meth:`MediaIndex.repair_saved` when
+    the batch is fully present (exact phash row count), raised on a
+    torn partial append, never re-appended."""
 
     def absorb(batch_df: DataFrame, batch_id: int) -> None:
         idx = MediaIndex.load(spark, index_path)
-        b = batch_df.agg(
-            F.min(idx._id_col).alias("lo"), F.max(idx._id_col).alias("hi")
-        ).first()
-        if b["hi"] is None:
+        b = storage.monotone_batch(
+            batch_df, idx._id_col, idx.max_id, "multimodal.foreach_batch_add"
+        )
+        if b is None:
             return
-        if idx.max_id is None:
-            raise ValueError(
-                "multimodal.foreach_batch_add: the saved index has no "
-                "max_id high-water mark (meta predates it) — re-save() "
-                "the index before attaching streamed ingestion"
-            )
-        if b["hi"] <= idx.max_id:
-            return  # fully-replayed batch — already absorbed
-        if b["lo"] <= idx.max_id:
-            raise ValueError(
-                "multimodal.foreach_batch_add: monotone-id contract "
-                f"violated — batch ids straddle the saved high-water mark "
-                f"{idx.max_id} (lo={b['lo']}, hi={b['hi']}); re-appending "
-                "part of a batch would duplicate its rows"
-            )
         disk_hi = idx.phash.agg(F.max("media_id")).first()[0]
         if disk_hi is not None and int(disk_hi) > idx.max_id:
             n_batch = batch_df.count()
@@ -2047,27 +2004,17 @@ def foreach_batch_add(spark: SparkSession, index_path: str):
 
 def foreach_batch_retract(spark: SparkSession, index_path: str):
     """Structured-Streaming DELETION feed into a saved media index —
-    the deletion twin of :func:`foreach_batch_add` (takedown / opt-out
-    streams): each micro-batch of media ids lands as one
-    :meth:`MediaIndex.retract` + :meth:`MediaIndex.retract_saved`,
-    touching NO media bytes (the phash stage is content-complete for
-    deletion). At-least-once safety: committed-ledger ids are
-    pre-filtered (replays and duplicate requests absorb silently), a
-    torn previous landing is purged-and-relanded by retract_saved's
-    protocol."""
+    the deletion twin of :func:`foreach_batch_add`: each micro-batch
+    of media ids lands as one :meth:`MediaIndex.retract` +
+    :meth:`MediaIndex.retract_saved`, touching NO media bytes (the
+    phash stage is content-complete for deletion), under the
+    at-least-once absorb contract of :mod:`.storage`."""
 
     def absorb(batch_df: DataFrame, batch_id: int) -> None:
         idx = MediaIndex.load(spark, index_path)
-        ids = batch_df.select(
-            F.col(batch_df.columns[0]).cast("long").alias("id")
-        ).distinct()
-        if idx._retracted_ids is not None:
-            ids = ids.join(
-                F.broadcast(idx._retracted_ids), "id", "left_anti"
-            )
-        ids = ids.localCheckpoint()
-        if ids.first() is None:
-            return  # fully absorbed already
+        ids = storage.unretracted_ids(batch_df, idx._retracted_ids)
+        if ids is None:
+            return
         idx.retract(ids)
         idx.retract_saved(index_path)
 

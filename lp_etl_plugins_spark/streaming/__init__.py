@@ -33,14 +33,12 @@ __all__ = [
     "sliding_counts",
     "session_stats",
     "session_timeout_summaries",
-    "make_session_processor",
     "user_totals",
     "stateful_user_totals",
     "dedup_events",
     "enriched_nation_counts",
     "click_purchase_join",
     "click_purchase_outer_join",
-    "make_totals_processor",
     "hll_registers",
     "hll_estimate",
     "histogram_registers",
@@ -101,33 +99,6 @@ _TOTALS_OUT = "user_id long, n_events long, sum_value double"
 _TOTALS_STATE = "n long, s double"
 
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-_DEFAULT_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-)
-
-
-def _tws_available(spark) -> bool:
-    """Spark 4's arbitrary-state v2 runtime (``transformWithState``)
-    needs BOTH the ``protobuf`` package (the JVM state server and the
-    Python worker speak protobuf; absent it the worker crashes at
-    init) AND the RocksDB state store provider configured on the
-    session (the v2 operator refuses the default HDFS-backed provider
-    at runtime). Protobuf importability alone is an incidental proxy —
-    it ships as a transitive dep of many packages — so gate on both,
-    against the session the query will actually run under."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        return False
-    provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", _DEFAULT_PROVIDER
-    )
-    return "RocksDBStateStoreProvider" in provider
-
-
 def _round2(s: float) -> float:
     """2-decimal HALF_UP rounding for the pandas emit paths — the same
     rule as Spark's ``F.round``, so a sum landing exactly on a
@@ -138,39 +109,6 @@ def _round2(s: float) -> float:
     return float(Decimal(repr(s)).quantize(Decimal("0.01"), ROUND_HALF_UP))
 
 
-def make_totals_processor():
-    """StatefulProcessor for :func:`stateful_user_totals` on the
-    Spark 4 arbitrary-state v2 API: ONE ValueState of (count,
-    unrounded sum) per user key; emits the running total on every
-    trigger. Factory (not module-level class) so importing this
-    module never touches the v2 API on containers without it."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", _TOTALS_STATE)
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            n, s = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [_round2(s)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return TotalsProcessor()
-
-
 def stateful_user_totals(events: DataFrame) -> DataFrame:
     """Custom stateful streaming operator: per-user totals accumulated
     across micro-batches, one updated row per user per trigger.
@@ -178,28 +116,15 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     cardinality, partitioned by the group key, so at scale each
     executor holds only its keys' state.
 
-    Primary path is the Spark 4 arbitrary-state v2 API
-    (``transformWithStateInPandas`` + :func:`make_totals_processor` —
-    ValueState now, timers/TTL/list/map state available on the same
-    handle; requires the RocksDB state store provider configured on
-    the session AND the ``protobuf`` package — both checked by
-    :func:`_tws_available`). Where either is missing (this container
-    lacks protobuf; a default session lacks RocksDB) the same
-    contract runs on ``applyInPandasWithState`` — identical output,
-    asserted by the batch-equivalence test either way.
+    Runs on ``applyInPandasWithState``, which every Spark 4 session
+    supports (the arbitrary-state v2 API, ``transformWithStateInPandas``,
+    additionally needs the ``protobuf`` package and a RocksDB state
+    store provider, and would give identical output).
 
     On the final trigger the emitted totals equal :func:`user_totals`
     on the same data seen as one batch — asserted in
     tests/test_streaming.py. Streaming frames only; batch callers use
     the twin."""
-    if _tws_available(events.sparkSession):
-        return events.groupBy("user_id").transformWithStateInPandas(
-            make_totals_processor(),
-            _TOTALS_OUT,
-            "Update",
-            "None",
-        )
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def update_totals(key, pdfs, state):
@@ -242,8 +167,8 @@ def _session_rows(key, start, last, n, s):
 
 
 def _fold_session_events(key, secs, values, state_tuple, gap_secs):
-    """Shared accumulator for both stateful runtimes: fold (sec, value)
-    pairs (ascending sec) into the open-session tuple, yielding a
+    """Session accumulator of :func:`session_timeout_summaries`: fold
+    (sec, value) pairs (ascending sec) into the open-session tuple, yielding a
     summary frame for every session CLOSED by an in-batch gap; returns
     (frames, open_state)."""
     out = []
@@ -264,54 +189,6 @@ def _fold_session_events(key, secs, values, state_tuple, gap_secs):
     return out, (start, last, n, s)
 
 
-def make_session_processor(gap_secs: int = 21600):
-    """StatefulProcessor for :func:`session_timeout_summaries` on the
-    Spark 4 arbitrary-state v2 API — the REGISTERED-TIMER facility:
-    one ValueState (start, last, n, sum) per user; every input batch
-    re-registers an event-time timer at ``last + gap``; when the
-    watermark passes it, ``handleExpiredTimer`` emits the session
-    summary and clears the state — emission on INACTIVITY, which no
-    windowed aggregation expresses directly. Factory (not module-level
-    class) so importing never touches the v2 API on containers
-    without it."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._sess = handle.getValueState("sess", _SESSION_STATE)
-
-        def handleInputRows(self, key, rows, timer_values):
-            recs = []
-            for pdf in rows:
-                recs.extend(zip(pdf["sec"].tolist(), pdf["value"].tolist()))
-            recs.sort()
-            prev = self._sess.get() if self._sess.exists() else None
-            out, open_state = _fold_session_events(
-                key, [r[0] for r in recs], [r[1] for r in recs], prev, gap_secs
-            )
-            if prev is not None:
-                # re-registering supersedes the old timer
-                self._handle.deleteTimer((prev[1] + gap_secs) * 1000)
-            self._sess.update(open_state)
-            self._handle.registerTimer((open_state[1] + gap_secs) * 1000)
-            yield from out
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            if self._sess.exists():
-                start, last, n, s = self._sess.get()
-                self._sess.clear()
-                yield _session_rows(key, start, last, n, s)
-
-        def close(self) -> None:
-            pass
-
-    return SessionProcessor()
-
-
 def session_timeout_summaries(
     events: DataFrame, gap_secs: int = 21600, watermark: str = "1 hour"
 ) -> DataFrame:
@@ -324,13 +201,10 @@ def session_timeout_summaries(
 
     Streaming path: per-user state (start, last, n, sum); sessions
     closed by an IN-BATCH gap emit immediately; the trailing open
-    session emits when event time passes ``last + gap``. Primary
-    runtime is the Spark 4 v2 API (``transformWithStateInPandas``,
-    EventTime mode, :func:`make_session_processor` with registered
-    timers); where unavailable (:func:`_tws_available`) the identical
-    contract runs on ``applyInPandasWithState`` with
-    ``EventTimeTimeout`` (``setTimeoutTimestamp(last + gap)`` — the
-    v1 spelling of the same timer). State is one 4-tuple per ACTIVE
+    session emits when event time passes ``last + gap``. Runs on
+    ``applyInPandasWithState`` with ``EventTimeTimeout``
+    (``setTimeoutTimestamp(last + gap)`` — the v1 spelling of the v2
+    API's registered event-time timer). State is one 4-tuple per ACTIVE
     user, pruned at every timeout — bounded by concurrently-active
     users, not stream length.
 
@@ -375,14 +249,6 @@ def session_timeout_summaries(
         ).select("user_id", "session_start", "session_end", "n_events", "sum_value")
 
     ev = ev.withWatermark("ts", watermark)
-    if _tws_available(events.sparkSession):
-        return ev.groupBy("user_id").transformWithStateInPandas(
-            make_session_processor(gap_secs),
-            _SESSION_OUT,
-            "Append",
-            "EventTime",
-        )
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def update_sessions(key, pdfs, state):

@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from . import storage
+
 
 class TornStateError(ValueError):
     """A maintenance operation refused to run over torn on-disk state
@@ -974,11 +976,11 @@ class RepeatIndex:
         the meta sequence), or None when no retraction ever ran — the
         fast path stays zero-cost."""
         p = f"{self._path}/retracted"
-        if not _parquet_dir_exists(p):
+        if not storage.parquet_dir_exists(p):
             return None
         n_r = int(self.meta.get("n_retractions") or 0)
         return (
-            _read_parquet_pinned(self._spark, p)
+            storage.read_parquet_pinned(self._spark, p)
             .filter(F.col("rseq") <= n_r)
             .select("id")
         )
@@ -1008,7 +1010,7 @@ class RepeatIndex:
         re-evaluated doc that lost its last repeat upserts an
         ``n_spans = 0`` row — presence in this view means ≥ 1 span,
         matching the build contract)."""
-        log = _read_parquet_pinned(self._spark, f"{self._path}/spans")
+        log = storage.read_parquet_pinned(self._spark, f"{self._path}/spans")
         w = W.partitionBy("id").orderBy(F.col("gen").desc())
         out = (
             log.withColumn("__rn", F.row_number().over(w))
@@ -1087,7 +1089,7 @@ class RepeatIndex:
 
     @classmethod
     def load(cls, spark, path: str) -> "RepeatIndex":
-        meta = _read_control_row(f"{path}/meta")
+        meta = storage.read_control_row(f"{path}/meta")
         # metas written before the retraction protocol lack the field
         meta["n_retractions"] = int(meta.get("n_retractions") or 0)
         # metas written before the counts substrate existed: no valid
@@ -1098,7 +1100,7 @@ class RepeatIndex:
     def _write_meta(self) -> None:
         m = self.meta
         vals = tuple(m[f.split(" ")[0]] for f in self._META_SCHEMA.split(", "))
-        _write_control_parquet(f"{self._path}/meta", [vals], self._META_SCHEMA)
+        storage.write_control_parquet(f"{self._path}/meta", [vals], self._META_SCHEMA)
 
     # ------------------------------------------------------------ update
 
@@ -1129,7 +1131,7 @@ class RepeatIndex:
         d_post = dpos.select("g", "id").distinct().localCheckpoint(eager=False)
         d_ids = delta_docs.select(F.col(m["id_col"]).alias("id")).distinct()
 
-        if _parquet_dir_exists(f"{p}/retracted"):
+        if storage.parquet_dir_exists(f"{p}/retracted"):
             led = spark.read.parquet(f"{p}/retracted")
             n_r = int(m.get("n_retractions") or 0)
             if led.filter(F.col("rseq") > n_r).limit(1).count():
@@ -1343,8 +1345,8 @@ class RepeatIndex:
             )
         led_path = f"{p}/retracted"
         led = None
-        if _parquet_dir_exists(led_path):
-            _recover_swapped_dir(led_path)
+        if storage.parquet_dir_exists(led_path):
+            storage.recover_swapped_dir(led_path)
             led = spark.read.parquet(led_path)
             unc = led.filter(F.col("rseq") > n_r).select("id").distinct()
             if unc.limit(1).count():
@@ -1367,8 +1369,8 @@ class RepeatIndex:
                 # gen-check below on the next attempt. Spans-first is
                 # idempotent: a crash before the ledger purge re-enters
                 # this branch and the gen filter is a no-op.
-                _recover_swapped_dir(f"{p}/spans")
-                _rewrite_parquet_dir(
+                storage.recover_swapped_dir(f"{p}/spans")
+                storage.rewrite_parquet_dir(
                     spark,
                     f"{p}/spans",
                     spark.read.parquet(f"{p}/spans").filter(
@@ -1376,7 +1378,7 @@ class RepeatIndex:
                     ),
                     1 << 20,
                 )
-                _rewrite_parquet_dir(
+                storage.rewrite_parquet_dir(
                     spark, led_path, led.filter(F.col("rseq") <= n_r), 1 << 20
                 )
                 led = spark.read.parquet(led_path)
@@ -1428,7 +1430,7 @@ class RepeatIndex:
             F.broadcast(r_ids), "id", "left_semi"
         ).localCheckpoint(eager=False)
         r_grams = r_post.select("g").distinct()
-        have_counts = m.get("counts_seg") is not None and _parquet_dir_exists(
+        have_counts = m.get("counts_seg") is not None and storage.parquet_dir_exists(
             f"{p}/gram_counts"
         )
         if have_counts:
@@ -1604,75 +1606,27 @@ class RepeatIndex:
 
     @classmethod
     def foreach_batch_update(cls, spark, index_path: str, corpus_path: str):
-        """Structured-Streaming ingestion — the RepeatIndex member of
-        the family (`incremental.foreach_batch_update`,
-        `vectorops.foreach_batch_add`): a ``(batch_df, batch_id) ->
-        None`` function for ``writeStream.foreachBatch`` that appends
-        each micro-batch to the corpus parquet log at ``corpus_path``
-        AND absorbs it as one :meth:`update`. Because ``update`` needs
-        the old TEXTS of touched docs, the helper co-maintains the
-        corpus log the index was built from — pass the directory the
-        index's ``build`` corpus lives in.
-
-        The STREAMING form imposes the monotone-id contract (batch ids
-        strictly above ``meta.max_doc_id`` — this is what the
-        otherwise-informational counter is for): a fully replayed
-        batch is skipped idempotently, a straddling batch raises. The
-        corpus append runs FIRST and is itself replay-guarded against
-        the corpus max id, so the crash window between the two writes
-        (the engine's documented non-atomic seam) recovers on replay
-        instead of duplicating rows."""
+        """Structured-Streaming ingestion: each micro-batch lands as one
+        :meth:`update`, under the at-least-once absorb contract of
+        :mod:`.storage` (``meta.max_doc_id`` is the high-water mark).
+        Because ``update`` needs the old TEXTS of touched docs, the
+        absorber co-maintains the corpus log the index was built from
+        at ``corpus_path``."""
 
         def absorb(batch_df: "DataFrame", batch_id: int) -> None:
             idx = cls.load(spark, index_path)
             id_col = idx.meta["id_col"]
-            b = batch_df.agg(
-                F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
-            ).first()
-            if b["hi"] is None:
+            who = "RepeatIndex.foreach_batch_update"
+            b = storage.monotone_batch(
+                batch_df, id_col, idx.meta["max_doc_id"], who
+            )
+            if b is None:
                 return
-            if b["hi"] <= idx.meta["max_doc_id"]:
-                return  # fully-replayed batch — already absorbed
-            if b["lo"] <= idx.meta["max_doc_id"]:
-                raise ValueError(
-                    "RepeatIndex.foreach_batch_update: monotone-id contract "
-                    f"violated — batch ids straddle the indexed max "
-                    f"{idx.meta['max_doc_id']} (lo={b['lo']}, hi={b['hi']})"
-                )
-            corpus = spark.read.parquet(corpus_path)
-            c_hi = corpus.agg(F.max(id_col)).first()[0]
-            if c_hi is None or c_hi < b["lo"]:
-                batch_df.write.mode("append").parquet(corpus_path)
-            elif c_hi < b["hi"]:
-                raise ValueError(
-                    "RepeatIndex.foreach_batch_update: corpus log partially "
-                    f"overlaps the batch (corpus max {c_hi} inside "
-                    f"[{b['lo']}, {b['hi']}]) — torn corpus append; repair "
-                    "the corpus log before resuming"
-                )
-            else:
-                # corpus max covers the batch — but a torn MULTI-FILE
-                # append can commit the part-file holding the batch's
-                # max id while losing others, which satisfies
-                # c_hi >= hi with rows in [lo, hi] missing; skipping
-                # the append then silently breaks update == rebuild
-                # (touched-doc re-eval misses the lost texts). Verify
-                # completeness with one aggregate before trusting it.
-                n_disk = corpus.filter(
-                    F.col(id_col).between(int(b["lo"]), int(b["hi"]))
-                ).count()
-                n_batch = batch_df.count()
-                if n_disk != n_batch:
-                    raise ValueError(
-                        "RepeatIndex.foreach_batch_update: corpus log max "
-                        f"covers the batch but holds {n_disk} rows in "
-                        f"[{b['lo']}, {b['hi']}] vs the batch's {n_batch} "
-                        "— torn corpus append; repair the corpus log "
-                        "before resuming"
-                    )
-                # corpus holds the whole batch (crash landed between
-                # the corpus append and the index update — recover by
-                # redoing only the index half)
+            # a corpus log already holding the batch means the crash
+            # landed between the two halves: redo only the index half
+            corpus, _ = storage.append_corpus_log(
+                spark, corpus_path, batch_df, id_col, b, who
+            )
             idx.update(
                 batch_df, old_docs=corpus.filter(F.col(id_col) < b["lo"])
             )
@@ -1681,32 +1635,19 @@ class RepeatIndex:
 
     @classmethod
     def foreach_batch_retract(cls, spark, index_path: str, corpus_path: str):
-        """Structured-Streaming DELETION feed — the deletion twin of
-        :meth:`foreach_batch_update` (opt-out / takedown streams): a
-        ``(batch_df, batch_id) -> None`` function for
-        ``writeStream.foreachBatch`` landing each micro-batch of doc
-        ids as one :meth:`retract`. At-least-once safety: ids already
-        in the committed ledger (a replayed batch, or duplicate
-        deletion requests across batches) are pre-filtered, so every
-        replay converges and repeats absorb silently; a torn previous
-        landing is purged-and-relanded by retract's own protocol (the
-        pre-filter makes the replay's fresh set equal the torn
-        attempt's, which is what its same-ids rule requires).
-        ``corpus_path`` is the co-maintained corpus log — touched
-        survivors' texts come from it (the retracted docs' own texts
-        are never needed)."""
+        """Structured-Streaming DELETION feed, the twin of
+        :meth:`foreach_batch_update`: each micro-batch of doc ids lands
+        as one :meth:`retract`, under the at-least-once absorb contract
+        of :mod:`.storage`. ``corpus_path`` is the co-maintained corpus
+        log — touched survivors' texts come from it (the retracted
+        docs' own texts are never needed)."""
 
         def absorb(batch_df: "DataFrame", batch_id: int) -> None:
             idx = cls.load(spark, index_path)
-            ids = batch_df.select(
-                F.col(batch_df.columns[0]).cast("long").alias("id")
-            ).distinct()
             t = idx._tombstones()
-            if t is not None:
-                ids = ids.join(F.broadcast(t), "id", "left_anti")
-            ids = ids.localCheckpoint()
-            if ids.first() is None:
-                return  # fully absorbed already
+            ids = storage.unretracted_ids(batch_df, t)
+            if ids is None:
+                return
             icol = idx.meta["id_col"]
             corpus = spark.read.parquet(corpus_path)
             old = corpus.join(
@@ -1750,7 +1691,7 @@ class RepeatIndex:
         # destroy the committed row the replay needs) — the same
         # guard class as CurationState.compact's pending-marker refuse
         torn = bool(log.filter(F.col("gen") > n_u).limit(1).count())
-        has_led = _parquet_dir_exists(f"{p}/retracted")
+        has_led = storage.parquet_dir_exists(f"{p}/retracted")
         if not torn and has_led:
             torn = bool(
                 spark.read.parquet(f"{p}/retracted")
@@ -1792,12 +1733,12 @@ class RepeatIndex:
             .localCheckpoint()
         )
         out = {
-            "spans": _rewrite_parquet_dir(
+            "spans": storage.rewrite_parquet_dir(
                 spark, f"{p}/spans", resolved, target_rows_per_file
             ),
             # g-sorted layout: tight per-file min/max on the gram key,
             # so the retraction's flipped-gram locate prunes files
-            "postings": _rewrite_parquet_dir(
+            "postings": storage.rewrite_parquet_dir(
                 spark,
                 f"{p}/postings",
                 live_post,
@@ -1806,14 +1747,14 @@ class RepeatIndex:
             ),
         }
         counts = live_post.groupBy("g").agg(F.count(F.lit(1)).alias("c"))
-        if _parquet_dir_exists(f"{p}/gram_counts"):
-            out["gram_counts"] = _rewrite_parquet_dir(
+        if storage.parquet_dir_exists(f"{p}/gram_counts"):
+            out["gram_counts"] = storage.rewrite_parquet_dir(
                 spark, f"{p}/gram_counts", counts, target_rows_per_file
             )
         else:
             counts.write.mode("overwrite").parquet(f"{p}/gram_counts")
         if has_led:
-            out["retracted"] = _rewrite_parquet_dir(
+            out["retracted"] = storage.rewrite_parquet_dir(
                 spark,
                 f"{p}/retracted",
                 spark.read.parquet(f"{p}/retracted").filter(
@@ -1821,7 +1762,7 @@ class RepeatIndex:
                 ),
                 target_rows_per_file,
             )
-            _stamp_resolved_retractions(p, n_r)
+            storage.stamp_resolved_retractions(p, n_r)
         m["counts_seg"] = int(m["n_updates"])
         self._write_meta()
         return out
@@ -1995,7 +1936,7 @@ def connected_components(
                     ru, rv = rv, ru
                 parent[rv] = ru  # larger root under smaller → root = min
         t = p.schema["u"].dataType.simpleString()
-        return _single_partition_df(
+        return storage.single_partition_df(
             p.sparkSession,
             sorted((x, find(x)) for x in parent),
             f"id {t}, cluster {t}",
@@ -2151,314 +2092,6 @@ def _star_contract(edges: DataFrame, max_iter: int) -> DataFrame:
             return edges
     raise RuntimeError(
         f"_star_contract: no star-forest fixpoint in {max_iter} rounds"
-    )
-
-
-def _local_path(path: str) -> str:
-    """Strip a ``file:`` scheme for driver-side filesystem operations
-    (compaction's delete+rename swap). This engine targets the local
-    filesystem; an object-store deployment fronts the same directories
-    with a transactional table format and gets compaction's swap as a
-    metadata commit instead."""
-    return path[len("file:"):] if path.startswith("file:") else path
-
-
-def _same_dir(a: str, b: str) -> bool:
-    """True when two directory paths resolve to the same filesystem
-    location — the as-of branch guard's equality test (``save`` from a
-    historical view must refuse its own source; a relative spelling or
-    a symlink must not slip past the check)."""
-    import os
-
-    return os.path.realpath(os.path.abspath(_local_path(a))) == os.path.realpath(
-        os.path.abspath(_local_path(b))
-    )
-
-
-def _single_partition_df(spark, rows: list, schema: str) -> DataFrame:
-    """1-slice ``createDataFrame`` for control-plane frames (meta rows,
-    empty log initializers). The default path parallelizes a tiny
-    Python list into ``defaultParallelism`` slices, and a downstream
-    ``coalesce(1)`` then evaluates ALL of them serially inside one
-    task — every empty slice still pays a Python-worker round trip
-    (~150 ms × 32 slices ≈ 5 s per 1-row meta write, measured on
-    local[32]). One slice from the start writes the same single file
-    in ~0.5 s and keeps state-maintenance wall time out of the
-    scheduler."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-
-
-def _write_control_parquet(path: str, rows: list, schema: str) -> None:
-    """Driver-side overwrite of a CONTROL-PLANE parquet directory (meta
-    rows, empty log initializers) via pyarrow — no Spark job at all.
-
-    The Spark path for a 1-row meta write costs a full scheduled job
-    (~0.4 s on local[32]: py4j round trips + task launch + commit
-    protocol) and the state-maintenance gates (t0/t34/t36/t38/v16)
-    each pay it up to three times. The bytes are the same parquet any
-    engine reads back (``spark.read.parquet`` infers the identical
-    schema from the footer; asserted by the round-trip tests that
-    cover every meta consumer). Driver-local filesystem only — the
-    same constraint as compaction's rename swap (:func:`_local_path`);
-    an object-store deployment fronts these directories with a table
-    format whose commit IS a metadata write."""
-    import os
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
-
-    arrow_schema = to_arrow_schema(_parse_datatype_string(schema))
-    cols = [
-        [row[i] for row in rows] for i in range(len(arrow_schema.names))
-    ]
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
-        schema=arrow_schema,
-    )
-    local = _local_path(path)
-    tmp = local + ".__meta__"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    if os.path.isdir(local):
-        old = local + ".__old__"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(local, old)
-        os.rename(tmp, local)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, local)
-
-
-def _append_control_parquet(
-    path: str, rows: list, schema: str, name: str | None = None
-) -> None:
-    """Driver-side APPEND of control-plane rows: one parquet file
-    added to ``path`` via pyarrow — the append-log twin of
-    :func:`_write_control_parquet`, with the same no-Spark-job
-    rationale (a 1-row manifest append must not cost a scheduled job
-    per commit) and the same driver-local-filesystem constraint. The
-    write is atomic for readers (dot-prefixed temp + rename — Spark
-    ignores dotfiles). A DETERMINISTIC ``name`` makes the append
-    physically idempotent: a crash-replay re-landing the same logical
-    row overwrites the same file instead of duplicating it, keeping
-    file-level snapshots byte-identical across replays (the chaos
-    suite's convergence standard)."""
-    import os
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
-
-    arrow_schema = to_arrow_schema(_parse_datatype_string(schema))
-    cols = [
-        [row[i] for row in rows] for i in range(len(arrow_schema.names))
-    ]
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
-        schema=arrow_schema,
-    )
-    local = _local_path(path)
-    os.makedirs(local, exist_ok=True)
-    if name is None:
-        name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(local, f".{name}.tmp")
-    pq.write_table(table, tmp)
-    os.replace(tmp, os.path.join(local, name))
-
-
-def _stamp_resolved_retractions(path: str, resolved_rseq: int) -> None:
-    """Sidecar resolution stamp (round 10) written by every family
-    ``compact()`` that physically resolves committed retractions
-    while RETAINING the ledger as its audit / replay-refusal record:
-    rows with ``rseq <= resolved_rseq`` are already folded into the
-    substrates (their anti-joins are no-ops), rows above it are
-    committed-but-unresolved and still carry a real per-read tax.
-    :func:`maintenance._tombstone_pressure` counts only the latter,
-    so the tombstone-threshold compaction trigger can't re-fire
-    forever on an already-resolved ledger. One control-plane row;
-    consumers clamp to the meta's current ``n_retractions`` so a
-    stale stamp from a previous state incarnation (sequence restart
-    at a fresh ``save()``) can never hide live rows."""
-    _write_control_parquet(
-        f"{path}/retracted_resolved",
-        [(int(resolved_rseq),)],
-        "resolved_rseq bigint",
-    )
-
-
-def _read_parquet_pinned(spark, path: str) -> DataFrame:
-    """``spark.read.parquet`` with the schema pre-read DRIVER-SIDE from
-    one footer (pyarrow) — Spark 4's schema inference launches a small
-    Spark job per bare read (~0.1–0.2 s of fixed scheduling on
-    local[32], measured), and the index ``load()`` paths open 5–8
-    stage directories each, so inference jobs alone out-cost the
-    actual reads (round 12, guide §1/§2: driver-job cadence). Reads
-    the FIRST data file's footer, matching what inference samples with
-    mergeSchema off (substrate directories are schema-uniform by
-    construction; sites with cross-round schema growth already pass
-    explicit DDL schemas). Falls back to the bare read when no data
-    file exists (same behavior either way: inference over an empty
-    directory raises in both paths)."""
-    import os
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    local = _local_path(path)
-    for root, _, files in os.walk(local):
-        for f in sorted(files):
-            if f.startswith(("_", ".")) or f.endswith(".crc"):
-                continue
-            arrow = pq.read_schema(os.path.join(root, f))
-            return spark.read.schema(from_arrow_schema(arrow)).parquet(path)
-    return spark.read.parquet(path)
-
-
-def _read_control_row(path: str) -> dict:
-    """Driver-side read of a 1-row control-plane parquet directory
-    (the meta tables every index family writes) via pyarrow — the
-    read twin of :func:`_write_control_parquet`: a Spark
-    ``read.parquet(...).first()`` costs a scheduled job (~0.2 s on
-    local[32]) per index ``load``, for one row of configuration.
-    Reads whatever engine wrote the files (Spark- and pyarrow-written
-    metas are both plain parquet). Returns the first row as a dict;
-    raises if the directory holds no rows."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    local = _local_path(path)
-    for root, _, files in os.walk(local):
-        for f in sorted(files):
-            if f.startswith(("_", ".")) or f.endswith(".crc"):
-                continue
-            t = pq.read_table(os.path.join(root, f))
-            if t.num_rows:
-                return {c: t.column(c)[0].as_py() for c in t.column_names}
-    raise ValueError(f"_read_control_row: no rows under {path}")
-
-
-def _parquet_dir_exists(path: str) -> bool:
-    import os
-
-    return os.path.isdir(_local_path(path))
-
-
-def _count_data_files(path: str) -> int:
-    """Data files under a parquet directory (recursive; skips Spark's
-    ``_SUCCESS``/metadata and hidden files)."""
-    import os
-
-    n = 0
-    for _, _, files in os.walk(_local_path(path)):
-        n += sum(1 for f in files if not f.startswith(("_", "."))
-                 and not f.endswith(".crc"))
-    return n
-
-
-def _rewrite_parquet_dir(
-    spark,
-    path: str,
-    frame: DataFrame,
-    target_rows_per_file: int,
-    n_rows: int | None = None,
-    order_by: list[str] | None = None,
-) -> dict:
-    """Replace ``path``'s parquet contents with ``frame`` laid out as
-    ``ceil(rows / target_rows_per_file)`` files: write the new layout
-    COMPLETELY into a sibling temp directory (this executes any read
-    of the old files), then swap via rename-aside — the old directory
-    is renamed to ``path.__old__`` BEFORE the new one is renamed in,
-    so a COMPLETE copy of the data exists on disk at every instant.
-    Crash contract: a crash during the new-layout write or before the
-    first rename leaves the old layout live (plus a temp dir); a
-    crash between the two renames leaves NO directory at ``path`` but
-    BOTH complete copies beside it — recovery is a single rename of
-    either surviving copy (``path.__compact__`` = new or
-    ``path.__old__`` = old) back to ``path``; a crash after the
-    second rename leaves the new layout live plus at most a leftover
-    ``.__old__`` dir, which the next rewrite clears. The frame is
-    persisted (memory-and-disk, the maintenance-job norm) across the
-    row count and the write so merge-on-read views (tombstone
-    anti-joins) compute ONCE, not once per action. Returns
-    ``{"rows", "files_before", "files_after"}``."""
-    import math
-    import os
-    import shutil
-
-    def _laid_out(fr: DataFrame, parts: int) -> DataFrame:
-        if order_by:
-            # range-partitioned + sorted layout: per-file min/max
-            # column statistics become TIGHT on the order keys, so a
-            # later literal/IN pushdown prunes files and row groups
-            # (the retraction locate-scan treatment — SCALE.md)
-            return fr.repartitionByRange(parts, *order_by).sortWithinPartitions(
-                *order_by
-            )
-        return fr.repartition(parts)
-
-    if n_rows is not None:
-        # caller already knows the count (e.g. update()'s fused metrics
-        # job counted the checkpointed frame) — skip the persist+count
-        # job; the write is then the single action over the frame
-        n = int(n_rows)
-        parts = max(1, math.ceil(n / max(target_rows_per_file, 1)))
-        local = _local_path(path)
-        tmp = local + ".__compact__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        _laid_out(frame, parts).write.mode("overwrite").parquet(tmp)
-    else:
-        frame = frame.persist()
-        try:
-            n = frame.count()
-            parts = max(1, math.ceil(n / max(target_rows_per_file, 1)))
-            local = _local_path(path)
-            tmp = local + ".__compact__"
-            shutil.rmtree(tmp, ignore_errors=True)
-            _laid_out(frame, parts).write.mode("overwrite").parquet(tmp)
-        finally:
-            frame.unpersist()
-    files_before = _count_data_files(path)
-    old_aside = local + ".__old__"
-    shutil.rmtree(old_aside, ignore_errors=True)
-    os.rename(local, old_aside)
-    os.rename(tmp, local)
-    shutil.rmtree(old_aside)
-    return {
-        "rows": int(n),
-        "files_before": files_before,
-        "files_after": _count_data_files(path),
-    }
-
-
-def _recover_swapped_dir(path: str) -> bool:
-    """Recover a :func:`_rewrite_parquet_dir` swap that crashed between
-    its two renames (the one window that leaves NO live directory at
-    ``path`` — but BOTH complete copies beside it): rename a surviving
-    complete copy back, preferring the new layout (``.__compact__`` —
-    complete by the write-before-swap contract) over the old
-    (``.__old__``). A live ``path`` is left untouched (leftover
-    sibling dirs are cleared by the next rewrite). Returns True if a
-    rename was performed; raises if ``path`` is missing and no
-    complete copy survives."""
-    import os
-
-    local = _local_path(path)
-    if os.path.isdir(local):
-        return False
-    for cand in (local + ".__compact__", local + ".__old__"):
-        if os.path.isdir(cand):
-            os.rename(cand, local)
-            return True
-    raise FileNotFoundError(
-        f"_recover_swapped_dir: {path} is missing and neither "
-        f"{path}.__compact__ nor {path}.__old__ survives"
     )
 
 
@@ -2698,17 +2331,17 @@ class DedupIndex:
             self._retracted_ids.select(
                 "id", F.lit(0).cast("bigint").alias("rseq")
             ).write.mode("overwrite").parquet(f"{path}/retracted")
-        elif _parquet_dir_exists(f"{path}/retracted"):
+        elif storage.parquet_dir_exists(f"{path}/retracted"):
             import shutil
 
-            shutil.rmtree(_local_path(f"{path}/retracted"))
+            shutil.rmtree(storage.local_path(f"{path}/retracted"))
         # the snapshot's stages carry no retracted rows — the sequence
         # restarts
         self.n_retractions = 0
         self._write_meta(path)
 
     def _write_meta(self, path: str) -> None:
-        _write_control_parquet(
+        storage.write_control_parquet(
             f"{path}/meta",
             [
                 (
@@ -2737,7 +2370,7 @@ class DedupIndex:
         so the loaded index accepts :meth:`update` deltas."""
         idx = cls.__new__(cls)
         idx._df = None
-        m = _read_control_row(f"{path}/meta")
+        m = storage.read_control_row(f"{path}/meta")
         idx._text_col = m["text_col"]
         idx._id_col = m["id_col"]
         idx._shingle_n = m["shingle_n"]
@@ -2757,7 +2390,10 @@ class DedupIndex:
 
         for stage in cls._STAGES:
             try:
-                setattr(idx, f"_{stage}", _read_parquet_pinned(spark, f"{path}/{stage}"))
+                setattr(
+                    idx, f"_{stage}",
+                    storage.read_parquet_pinned(spark, f"{path}/{stage}"),
+                )
             except AnalysisException:
                 # stage was excluded at save time (save(stages=...))
                 setattr(idx, f"_{stage}", None)
@@ -2766,9 +2402,9 @@ class DedupIndex:
         idx.n_retractions = int(m.get("n_retractions") or 0)
         idx._retracted_ids = None
         idx._tomb_delta = None
-        if _parquet_dir_exists(f"{path}/retracted"):
+        if storage.parquet_dir_exists(f"{path}/retracted"):
             t = (
-                _read_parquet_pinned(spark, f"{path}/retracted")
+                storage.read_parquet_pinned(spark, f"{path}/retracted")
                 .filter(F.col("rseq") <= idx.n_retractions)
                 .select("id")
                 .distinct()
@@ -3148,7 +2784,7 @@ class DedupIndex:
 
     def _retract_saved_unfenced(self, path: str) -> None:
         spark = self._tomb_delta.sparkSession
-        m = _read_control_row(f"{path}/meta")
+        m = storage.read_control_row(f"{path}/meta")
         stamp = m.get("max_doc_id")
         if stamp is None:
             raise ValueError(
@@ -3170,8 +2806,8 @@ class DedupIndex:
         led_path = f"{path}/retracted"
         replay_torn = False
         committed_full = None
-        if _parquet_dir_exists(led_path):
-            _recover_swapped_dir(led_path)
+        if storage.parquet_dir_exists(led_path):
+            storage.recover_swapped_dir(led_path)
             led = spark.read.parquet(led_path)
             unc = led.filter(F.col("rseq") > n_r).select("id").distinct()
             if unc.limit(1).count():
@@ -3245,7 +2881,7 @@ class DedupIndex:
             # the torn rows any earlier would erase the only signal
             # while the torn labels persist (the round-9 ADVICE
             # crash window).
-            _rewrite_parquet_dir(
+            storage.rewrite_parquet_dir(
                 spark,
                 led_path,
                 committed_full.unionByName(fresh),
@@ -3335,13 +2971,13 @@ class DedupIndex:
                 "DedupIndex.append_saved: no update() delta to append — "
                 "call update(new_docs) first"
             )
-        if _parquet_dir_exists(f"{path}/retracted"):
+        if storage.parquet_dir_exists(f"{path}/retracted"):
             # the trailing meta rewrite re-writes every field — sync
             # the retraction sequence from disk so an in-session
             # object never clobbers committed retractions back to
             # uncommitted; and refuse to interleave with a torn
             # retraction (its replay owns the purge)
-            m = _read_control_row(f"{path}/meta")
+            m = storage.read_control_row(f"{path}/meta")
             self.n_retractions = int(m.get("n_retractions") or 0)
             spark = self._delta["bands"].sparkSession
             if (
@@ -3399,34 +3035,22 @@ class DedupIndex:
 
     @classmethod
     def foreach_batch_update(cls, spark, index_path: str, corpus_path: str):
-        """Structured-Streaming ingestion into a saved standalone
-        dedup index — completing the streaming-absorber family
-        (`incremental.foreach_batch_update` for the full pipeline,
-        `vectorops.foreach_batch_add`, `RepeatIndex.
-        foreach_batch_update`, `multimodal.foreach_batch_add`): a
-        ``(batch_df, batch_id) -> None`` function for
-        ``writeStream.foreachBatch`` that appends each micro-batch to
-        the corpus parquet log at ``corpus_path`` AND absorbs it as
-        one :meth:`update` + O(delta) :meth:`append_saved`. Like
-        RepeatIndex, the absorber co-maintains the corpus log because
-        ``update`` verifies new pairs against touched old TEXTS — the
-        one thing the index does not persist.
+        """Structured-Streaming ingestion into a saved standalone dedup
+        index: each micro-batch lands as one :meth:`update` + O(delta)
+        :meth:`append_saved`, under the at-least-once absorb contract
+        of :mod:`.storage` (``max_doc_id`` is the high-water mark).
+        The absorber co-maintains the corpus log at ``corpus_path``
+        because ``update`` verifies new pairs against touched old
+        TEXTS — the one thing the index does not persist.
 
-        At-least-once safety: meta's ``max_doc_id`` is the high-water
-        mark (a pre-mark save must be re-``save``-d first — refused
-        loudly), a fully replayed batch is skipped idempotently, a
-        straddling batch raises, and the corpus append is
-        replay-guarded with the row-count completeness check (a torn
-        multi-file append satisfying the max-id probe alone is
-        detected, not silently skipped). The index half's multi-stage
-        append (pairs → verified → bands → clusters → meta) is
-        non-atomic, but a crash INSIDE it now REPAIRS on replay
-        instead of corrupting: the meta stamp trails every stage
-        write, so a replayed batch whose corpus half already landed
-        takes the redo branch — landed-but-unstamped rows (ids beyond
-        the stamp) are dropped from the loaded monotone stages, the
-        label stages (whose wholesale overwrite could itself have
-        torn) are re-derived from the repaired pair sets, and
+        The index half's multi-stage append (pairs → verified → bands
+        → clusters → meta) is non-atomic, but a crash INSIDE it
+        REPAIRS on replay: the meta stamp trails every stage write, so
+        a replayed batch whose corpus half already landed takes the
+        redo branch — landed-but-unstamped rows are dropped from the
+        loaded monotone stages (:meth:`rollback_unstamped`), the label
+        stages (whose wholesale overwrite could itself have torn) are
+        re-derived from the repaired pair sets, and
         :meth:`append_saved` runs in ``repair`` mode, anti-joining
         each monotone delta against disk so nothing lands twice. The
         replayed absorb converges to exactly the clean-absorb state
@@ -3436,58 +3060,13 @@ class DedupIndex:
         def absorb(batch_df: "DataFrame", batch_id: int) -> None:
             idx = cls.load(spark, index_path)
             id_col = idx._id_col
-            redo = False  # set when the corpus half already landed
-            b = batch_df.agg(
-                F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
-            ).first()
-            if b["hi"] is None:
+            who = "DedupIndex.foreach_batch_update"
+            b = storage.monotone_batch(batch_df, id_col, idx.max_doc_id, who)
+            if b is None:
                 return
-            if idx.max_doc_id is None:
-                raise ValueError(
-                    "DedupIndex.foreach_batch_update: the saved index has "
-                    "no max_doc_id high-water mark (meta predates it) — "
-                    "re-save() the index (which stamps it) before attaching "
-                    "streamed ingestion"
-                )
-            if b["hi"] <= idx.max_doc_id:
-                return  # fully-replayed batch — already absorbed
-            if b["lo"] <= idx.max_doc_id:
-                raise ValueError(
-                    "DedupIndex.foreach_batch_update: monotone-id contract "
-                    f"violated — batch ids straddle the indexed max "
-                    f"{idx.max_doc_id} (lo={b['lo']}, hi={b['hi']})"
-                )
-            corpus = spark.read.parquet(corpus_path)
-            c_hi = corpus.agg(F.max(id_col)).first()[0]
-            if c_hi is None or c_hi < b["lo"]:
-                batch_df.write.mode("append").parquet(corpus_path)
-            elif c_hi < b["hi"]:
-                raise ValueError(
-                    "DedupIndex.foreach_batch_update: corpus log partially "
-                    f"overlaps the batch (corpus max {c_hi} inside "
-                    f"[{b['lo']}, {b['hi']}]) — torn corpus append; repair "
-                    "the corpus log before resuming"
-                )
-            else:
-                n_disk = corpus.filter(
-                    F.col(id_col).between(int(b["lo"]), int(b["hi"]))
-                ).count()
-                n_batch = batch_df.count()
-                if n_disk != n_batch:
-                    raise ValueError(
-                        "DedupIndex.foreach_batch_update: corpus log max "
-                        f"covers the batch but holds {n_disk} rows in "
-                        f"[{b['lo']}, {b['hi']}] vs the batch's {n_batch} "
-                        "— torn corpus append; repair the corpus log "
-                        "before resuming"
-                    )
-                # corpus holds the whole batch (crash between the
-                # corpus append and the index meta stamp — redo the
-                # index half in repair mode: the crash may have landed
-                # any prefix of the stage appends, so each monotone
-                # delta anti-joins its on-disk stage instead of
-                # appending blindly)
-                redo = True
+            corpus, redo = storage.append_corpus_log(
+                spark, corpus_path, batch_df, id_col, b, who
+            )
             # on redo, the crashed append may have landed any prefix of
             # the stage writes — roll the loaded stages back to the meta
             # stamp (a landed bands append would otherwise double-count
@@ -3515,28 +3094,17 @@ class DedupIndex:
 
     @classmethod
     def foreach_batch_retract(cls, spark, index_path: str):
-        """Structured-Streaming DELETION feed — the deletion twin of
-        :meth:`foreach_batch_update` (opt-out / takedown streams): each
-        micro-batch of doc ids lands as one :meth:`retract` +
-        :meth:`retract_saved`. At-least-once safety: committed-ledger
-        ids are pre-filtered (replays and duplicate requests absorb
-        silently), and a torn previous landing is purged-and-relanded
-        by retract_saved's own protocol — the pre-filter makes the
-        replay's fresh set equal the torn attempt's. Needs no corpus:
-        the index stores its own edges."""
+        """Structured-Streaming DELETION feed, the twin of
+        :meth:`foreach_batch_update`: each micro-batch of doc ids lands
+        as one :meth:`retract` + :meth:`retract_saved`, under the
+        at-least-once absorb contract of :mod:`.storage`. Needs no
+        corpus: the index stores its own edges."""
 
         def absorb(batch_df: "DataFrame", batch_id: int) -> None:
             idx = cls.load(spark, index_path)
-            ids = batch_df.select(
-                F.col(batch_df.columns[0]).cast("long").alias("id")
-            ).distinct()
-            if idx._retracted_ids is not None:
-                ids = ids.join(
-                    F.broadcast(idx._retracted_ids), "id", "left_anti"
-                )
-            ids = ids.localCheckpoint()
-            if ids.first() is None:
-                return  # fully absorbed already
+            ids = storage.unretracted_ids(batch_df, idx._retracted_ids)
+            if ids is None:
+                return
             idx.retract(ids)
             idx.retract_saved(index_path)
 
@@ -3579,8 +3147,8 @@ class DedupIndex:
         copy exists on disk at every instant, and the one bad crash
         window (between the two renames) recovers with a single
         rename of either surviving copy (see
-        :func:`_rewrite_parquet_dir`'s crash contract;
-        :func:`_recover_swapped_dir` performs that rename). A
+        :func:`storage.rewrite_parquet_dir`'s crash contract;
+        :func:`storage.recover_swapped_dir` performs that rename). A
         production deployment fronts these directories with a
         transactional table format. Any in-memory object over ``path``
         is STALE afterwards (its plans captured the old file
@@ -3598,9 +3166,9 @@ class DedupIndex:
         for the stages present on disk."""
         tombs = None
         led_path = f"{path}/retracted"
-        if _parquet_dir_exists(led_path):
+        if storage.parquet_dir_exists(led_path):
             n_r = int(
-                _read_control_row(f"{path}/meta").get("n_retractions") or 0
+                storage.read_control_row(f"{path}/meta").get("n_retractions") or 0
             )
             led = spark.read.parquet(led_path)
             if led.filter(F.col("rseq") > n_r).limit(1).count():
@@ -3615,7 +3183,7 @@ class DedupIndex:
                 tombs = t.localCheckpoint()
         out: dict[str, dict] = {}
         for stage in cls._STAGES:
-            if not _parquet_dir_exists(f"{path}/{stage}"):
+            if not storage.parquet_dir_exists(f"{path}/{stage}"):
                 continue
             df = spark.read.parquet(f"{path}/{stage}")
             if tombs is not None and stage == "bands":
@@ -3631,17 +3199,17 @@ class DedupIndex:
                     "id_b",
                     "left_anti",
                 ).select(*cols)
-            out[stage] = _rewrite_parquet_dir(
+            out[stage] = storage.rewrite_parquet_dir(
                 spark, f"{path}/{stage}", df, target_rows_per_file
             )
-        if _parquet_dir_exists(led_path):
-            out["retracted"] = _rewrite_parquet_dir(
+        if storage.parquet_dir_exists(led_path):
+            out["retracted"] = storage.rewrite_parquet_dir(
                 spark,
                 led_path,
                 spark.read.parquet(led_path),
                 target_rows_per_file,
             )
-            _stamp_resolved_retractions(path, n_r)
+            storage.stamp_resolved_retractions(path, n_r)
         return out
 
 
@@ -4247,8 +3815,8 @@ class TrigramLM:
             self._retract_saved_unfenced(path)
 
     def _retract_saved_unfenced(self, path: str) -> None:
-        _recover_swapped_dir(f"{path}/counts")
-        m = _read_control_row(f"{path}/meta")
+        storage.recover_swapped_dir(f"{path}/counts")
+        m = storage.read_control_row(f"{path}/meta")
         stamp = m.get("max_id")
         if stamp is None:
             raise ValueError(
@@ -4273,15 +3841,15 @@ class TrigramLM:
                 "absorber) before retracting"
             )
         ledger_path = f"{path}/retracted"
-        has_ledger = _parquet_dir_exists(ledger_path)
+        has_ledger = storage.parquet_dir_exists(ledger_path)
         if has_ledger:
-            _recover_swapped_dir(ledger_path)
+            storage.recover_swapped_dir(ledger_path)
         if src_bounds["lo"] is not None and int(src_bounds["lo"]) < -n_r:
             # a previous retract_saved crashed between its segment
             # append and its meta commit — purge the uncommitted
             # segment rows (they are self-describing: src < -n_r),
             # then land fresh
-            _rewrite_parquet_dir(
+            storage.rewrite_parquet_dir(
                 spark,
                 f"{path}/counts",
                 self._committed(raw, stamp, n_r),
@@ -4296,7 +3864,7 @@ class TrigramLM:
             # the same rseq
             led = spark.read.parquet(ledger_path)
             if led.filter(F.col("rseq") > n_r).limit(1).count():
-                _rewrite_parquet_dir(
+                storage.rewrite_parquet_dir(
                     spark,
                     ledger_path,
                     led.filter(F.col("rseq") <= n_r),
@@ -4379,7 +3947,7 @@ class TrigramLM:
         with the boundary-filtered view, destroying every post-``H``
         segment and resetting the retraction sequence."""
         src = getattr(self, "_as_of_src", None)
-        if src is not None and _same_dir(src, path):
+        if src is not None and storage.same_dir(src, path):
             raise ValueError(
                 f"TrigramLM.save: this model is an as-of view of {src} — "
                 "overwriting its own source would destroy every segment "
@@ -4406,12 +3974,12 @@ class TrigramLM:
             self._retracted_ids.select(
                 "id", F.lit(0).cast("bigint").alias("rseq")
             ).write.mode("overwrite").parquet(f"{path}/retracted")
-        elif _parquet_dir_exists(f"{path}/retracted"):
+        elif storage.parquet_dir_exists(f"{path}/retracted"):
             # a retraction-free snapshot over a directory that had a
             # ledger: a stale ledger would refuse legitimate ids
             import shutil
 
-            shutil.rmtree(_local_path(f"{path}/retracted"))
+            shutil.rmtree(storage.local_path(f"{path}/retracted"))
         # the snapshot holds ONE positive segment (retractions already
         # merged in) — the retraction sequence restarts
         self.n_retractions = 0
@@ -4421,7 +3989,7 @@ class TrigramLM:
         # column config persists alongside n (mirroring
         # DedupIndex._META_SCHEMA) so a model trained on nonstandard
         # column names scores/updates the right columns after load()
-        _write_control_parquet(
+        storage.write_control_parquet(
             f"{path}/meta",
             [(
                 self._n,
@@ -4438,7 +4006,7 @@ class TrigramLM:
         """The segment log with the compat ``src`` column (models
         saved before the segmented form have none — all rows are
         base/committed)."""
-        raw = _read_parquet_pinned(spark, f"{path}/counts")
+        raw = storage.read_parquet_pinned(spark, f"{path}/counts")
         if "src" not in raw.columns:
             raw = raw.withColumn("src", F.lit(None).cast("bigint"))
         return raw
@@ -4482,7 +4050,7 @@ class TrigramLM:
         a fresh directory, leaving the source untouched."""
         lm = cls.__new__(cls)
         lm._df = None
-        m = _read_control_row(f"{path}/meta")
+        m = storage.read_control_row(f"{path}/meta")
         # models saved before the meta gained column config (n-only
         # schema) fall back to the historical defaults
         lm._text_col = m.get("text_col", "text")
@@ -4510,7 +4078,7 @@ class TrigramLM:
         )
         lm._retracted_ids = None
         lm._retract_delta = None
-        if _parquet_dir_exists(f"{path}/retracted"):
+        if storage.parquet_dir_exists(f"{path}/retracted"):
             led = spark.read.parquet(f"{path}/retracted").filter(
                 F.col("rseq") <= lm.n_retractions
             )
@@ -4556,7 +4124,7 @@ class TrigramLM:
             (F.col("src") < 0) & (-F.col("src") <= int(lm.n_retractions))
         )
         lm._retracted_ids = None
-        if _parquet_dir_exists(f"{path}/retracted"):
+        if storage.parquet_dir_exists(f"{path}/retracted"):
             led = spark.read.parquet(f"{path}/retracted").filter(
                 F.col("rseq") <= int(lm.n_retractions)
             )
@@ -4631,7 +4199,7 @@ class TrigramLM:
                 "TrigramLM.append_saved: no update() delta to append — "
                 "call update(new_docs) first"
             )
-        m = _read_control_row(f"{path}/meta")
+        m = storage.read_control_row(f"{path}/meta")
         stamp = m.get("max_id")
         # the trailing meta rewrite re-writes EVERY field — sync the
         # retraction sequence from disk so an in-session object never
@@ -4663,14 +4231,14 @@ class TrigramLM:
         if repair:
             # the crashed append may itself have died inside THIS
             # purge's rename-aside swap — recover the surviving copy
-            _recover_swapped_dir(f"{path}/counts")
+            storage.recover_swapped_dir(f"{path}/counts")
             spark = self._delta["counts"].sparkSession
             committed = self._committed(
                 self._raw_counts(spark, path),
                 stamp,
                 int(m.get("n_retractions") or 0),
             )
-            _rewrite_parquet_dir(spark, f"{path}/counts", committed, 1 << 20)
+            storage.rewrite_parquet_dir(spark, f"{path}/counts", committed, 1 << 20)
         self._delta["counts"].select(
             "g", "c", F.lit(b[1]).cast("bigint").alias("src")
         ).write.mode("append").parquet(f"{path}/counts")
@@ -4680,52 +4248,31 @@ class TrigramLM:
 
     @classmethod
     def foreach_batch_update(cls, spark, lm_path: str):
-        """Structured-Streaming ingestion into a saved LM — the last
-        index family to join the streaming-absorber set
-        (`incremental.foreach_batch_update`, `DedupIndex.
-        foreach_batch_update`, `RepeatIndex.foreach_batch_update`,
-        `vectorops.foreach_batch_add`, `multimodal.foreach_batch_add`):
-        a ``(batch_df, batch_id) -> None`` function for
-        ``writeStream.foreachBatch`` that absorbs each micro-batch as
-        one O(delta) :meth:`update` + :meth:`append_saved`. No corpus
-        log is co-maintained — the LM's additive math never needs old
-        TEXTS (the one structural simplification vs DedupIndex's
-        absorber).
+        """Structured-Streaming ingestion into a saved LM: each
+        micro-batch lands as one O(delta) :meth:`update` +
+        :meth:`append_saved`, under the at-least-once absorb contract
+        of :mod:`.storage` (``max_id`` is the high-water mark). No
+        corpus log is co-maintained — the LM's additive math never
+        needs old TEXTS.
 
-        At-least-once safety: meta's ``max_id`` is the high-water mark
-        (a pre-mark save is refused loudly), a fully replayed batch is
-        skipped idempotently, a straddling batch raises, and a replay
-        that finds landed-but-unstamped segment rows (the crash-inside
-        -append signature) takes the redo branch — purge + fresh
-        append via ``append_saved(repair=True)``. The replayed absorb
-        converges to exactly the clean-absorb state regardless of
-        which prefix of {segment files, meta stamp} the crash
+        A replay that finds landed-but-unstamped segment rows (the
+        crash-inside-append signature) takes the redo branch — purge +
+        fresh append via ``append_saved(repair=True)``. The replayed
+        absorb converges to exactly the clean-absorb state regardless
+        of which prefix of {segment files, meta stamp} the crash
         preserved (test-asserted across the crash windows)."""
 
         def absorb(batch_df: "DataFrame", batch_id: int) -> None:
             # a prior repair purge may have died between its swap's two
             # renames — recover the surviving complete copy first
-            _recover_swapped_dir(f"{lm_path}/counts")
+            storage.recover_swapped_dir(f"{lm_path}/counts")
             lm = cls.load(spark, lm_path)
-            if lm.max_id is None:
-                raise ValueError(
-                    "TrigramLM.foreach_batch_update: the saved model has "
-                    "no max_id high-water mark — re-save() from the "
-                    "corpus before attaching streamed ingestion"
-                )
-            b = batch_df.agg(
-                F.min(lm._id_col).alias("lo"), F.max(lm._id_col).alias("hi")
-            ).first()
-            if b["hi"] is None:
+            b = storage.monotone_batch(
+                batch_df, lm._id_col, lm.max_id,
+                "TrigramLM.foreach_batch_update",
+            )
+            if b is None:
                 return
-            if int(b["hi"]) <= lm.max_id:
-                return  # fully-replayed batch — already absorbed
-            if int(b["lo"]) <= lm.max_id:
-                raise ValueError(
-                    "TrigramLM.foreach_batch_update: monotone-id contract "
-                    f"violated — batch ids straddle the saved max "
-                    f"{lm.max_id} (lo={b['lo']}, hi={b['hi']})"
-                )
             # redo detection: unstamped segment rows mean the previous
             # attempt at SOME batch crashed between its segment append
             # and the meta stamp — one vocab-sized existence probe,
@@ -4744,16 +4291,13 @@ class TrigramLM:
 
     @classmethod
     def foreach_batch_retract(cls, spark, lm_path: str):
-        """Structured-Streaming DELETION feed — the LM member of the
-        deletion-absorber family: each micro-batch carries the
-        documents to retract WITH their original texts (the model
+        """Structured-Streaming DELETION feed: each micro-batch carries
+        the documents to retract WITH their original texts (the model
         stores no corpus, and the negative segment needs the grams),
-        landing as one :meth:`retract` + :meth:`retract_saved`.
-        At-least-once safety: docs whose ids sit in the committed
-        ledger are pre-filtered (replays and duplicate deletion
-        requests absorb silently — never a double subtraction), and a
-        torn previous landing is purged-and-relanded by
-        retract_saved's protocol."""
+        landing as one :meth:`retract` + :meth:`retract_saved` under
+        the at-least-once absorb contract of :mod:`.storage` — the
+        ledger pre-filter keys on the docs' id column instead of a
+        bare id batch."""
 
         def absorb(batch_df: "DataFrame", batch_id: int) -> None:
             lm = cls.load(spark, lm_path)
@@ -4808,7 +4352,7 @@ class TrigramLM:
     def _compact_unfenced(
         cls, spark, path: str, *, target_rows_per_file: int = 1 << 20
     ) -> dict:
-        m = _read_control_row(f"{path}/meta")
+        m = storage.read_control_row(f"{path}/meta")
         stamp = m.get("max_id")
         n_r = int(m.get("n_retractions") or 0)
         raw = cls._raw_counts(spark, path)
@@ -4831,12 +4375,12 @@ class TrigramLM:
             .select("g", "c", F.lit(stamp).cast("bigint").alias("src"))
         )
         out = {
-            "counts": _rewrite_parquet_dir(
+            "counts": storage.rewrite_parquet_dir(
                 spark, f"{path}/counts", merged, target_rows_per_file
             )
         }
-        if _parquet_dir_exists(f"{path}/retracted"):
-            out["retracted"] = _rewrite_parquet_dir(
+        if storage.parquet_dir_exists(f"{path}/retracted"):
+            out["retracted"] = storage.rewrite_parquet_dir(
                 spark,
                 f"{path}/retracted",
                 spark.read.parquet(f"{path}/retracted").filter(
@@ -4844,7 +4388,7 @@ class TrigramLM:
                 ),
                 target_rows_per_file,
             )
-            _stamp_resolved_retractions(path, n_r)
+            storage.stamp_resolved_retractions(path, n_r)
         return out
 
 

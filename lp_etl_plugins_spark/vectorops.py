@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from . import storage
+
 __all__ = [
     "cosine",
     "dot",
@@ -1111,12 +1113,10 @@ class VectorIndex:
         listdir, no Spark job; None when the directory is absent."""
         import os
 
-        from .textops import _local_path
-
         try:
             return sum(
                 e.stat().st_size
-                for e in os.scandir(_local_path(f"{path}/{stage}"))
+                for e in os.scandir(storage.local_path(f"{path}/{stage}"))
                 if e.is_file() and not e.name.startswith((".", "_"))
             )
         except OSError:
@@ -1642,9 +1642,7 @@ class VectorIndex:
         post-``H`` ingested vector."""
         src = getattr(self, "_as_of_src", None)
         if src is not None:
-            from .textops import _same_dir
-
-            if _same_dir(src, path):
+            if storage.same_dir(src, path):
                 raise ValueError(
                     f"VectorIndex.save: this index is an as-of view of "
                     f"{src} — overwriting its own source would destroy "
@@ -1711,23 +1709,19 @@ class VectorIndex:
             for fut in [pool.submit(_write, s, fr) for s, fr in frames]:
                 fut.result()
         if self._tombstones is None:
-            from .textops import _local_path, _parquet_dir_exists
-
-            if _parquet_dir_exists(f"{path}/tombstones"):
+            if storage.parquet_dir_exists(f"{path}/tombstones"):
                 # re-saving a tombstone-free snapshot over a directory
                 # that had retractions: a surviving stale log would
                 # filter the NEW corpus's colliding ids
                 import shutil
 
-                shutil.rmtree(_local_path(f"{path}/tombstones"))
+                shutil.rmtree(storage.local_path(f"{path}/tombstones"))
         hi = bounds["hi"]
         self.max_id = None if hi is None else int(hi)
         self._write_meta(path)
 
     def _write_meta(self, path: str) -> None:
-        from .textops import _write_control_parquet
-
-        _write_control_parquet(
+        storage.write_control_parquet(
             f"{path}/meta",
             [(self._id_col, self._vec_col, self._m, self._dims, self.max_id)],
             self._META_SCHEMA,
@@ -1759,8 +1753,6 @@ class VectorIndex:
             self._append_saved_locked(path)
 
     def _append_saved_locked(self, path: str) -> None:
-        from .textops import _parquet_dir_exists
-
         self._delta["corpus_lists"].write.mode("append").parquet(
             f"{path}/corpus_lists"
         )
@@ -1781,7 +1773,7 @@ class VectorIndex:
         elif "bucket" not in dir_cols and "bucket" in delta_codes.columns:
             delta_codes = delta_codes.drop("bucket")
         delta_codes.write.mode("append").parquet(f"{path}/codes")
-        if self._delta.get("sq8_codes") is not None and _parquet_dir_exists(
+        if self._delta.get("sq8_codes") is not None and storage.parquet_dir_exists(
             f"{path}/sq8_codes"
         ):
             # refine codes append only onto a layout that HAS refine
@@ -1830,18 +1822,16 @@ class VectorIndex:
         → ``{stage: {"rows", "files_before", "files_after"}}``.
         Single-writer-fenced (see :mod:`.lease`)."""
         from .lease import dir_lease
-        from .textops import _parquet_dir_exists, _rewrite_parquet_dir
-
         with dir_lease(path, role="VectorIndex.compact"):
             tomb_dir = f"{path}/tombstones"
             tombs = None
-            if _parquet_dir_exists(tomb_dir):
+            if storage.parquet_dir_exists(tomb_dir):
                 t = spark.read.parquet(tomb_dir).select("id").distinct()
                 if t.first() is not None:
                     tombs = t.localCheckpoint()
             stages = list(cls._STAGES) + [
                 s for s in cls._REFINE_STAGES
-                if _parquet_dir_exists(f"{path}/{s}")
+                if storage.parquet_dir_exists(f"{path}/{s}")
             ]
             out = {}
             for stage in stages:
@@ -1889,11 +1879,11 @@ class VectorIndex:
                     path, "sq8_codes"
                 ):
                     order_by = ["id"]
-                out[stage] = _rewrite_parquet_dir(
+                out[stage] = storage.rewrite_parquet_dir(
                     spark, f"{path}/{stage}", df, target_rows_per_file,
                     order_by=order_by,
                 )
-            if _parquet_dir_exists(tomb_dir):
+            if storage.parquet_dir_exists(tomb_dir):
                 # resolved into the rewrites above — clear the log
                 spark.createDataFrame([], "id bigint").write.mode(
                     "overwrite"
@@ -1901,7 +1891,7 @@ class VectorIndex:
                 out["tombstones"] = {
                     "rows": 0, "files_before": None, "files_after": None,
                 }
-                if tombs is not None and _parquet_dir_exists(
+                if tombs is not None and storage.parquet_dir_exists(
                     f"{path}/{cls._RETRAIN_SUPPRESS}"
                 ):
                     # physically resolving tombstones CHANGES the live
@@ -1912,10 +1902,8 @@ class VectorIndex:
                     # suppressed (round-11 advice fix)
                     import shutil
 
-                    from .textops import _local_path
-
                     shutil.rmtree(
-                        _local_path(f"{path}/{cls._RETRAIN_SUPPRESS}")
+                        storage.local_path(f"{path}/{cls._RETRAIN_SUPPRESS}")
                     )
             return out
 
@@ -1932,13 +1920,11 @@ class VectorIndex:
 
     @classmethod
     def _retrain_stages(cls, path: str) -> list[str]:
-        from .textops import _parquet_dir_exists
-
         return list(cls._STAGES) + [
             s
             for s in cls._REFINE_STAGES
-            if _parquet_dir_exists(f"{path}/{s}")
-            or _parquet_dir_exists(f"{path}/{s}.__retrain__")
+            if storage.parquet_dir_exists(f"{path}/{s}")
+            or storage.parquet_dir_exists(f"{path}/{s}.__retrain__")
         ]
 
     @classmethod
@@ -1950,14 +1936,8 @@ class VectorIndex:
         import os
         import shutil
 
-        from .textops import (
-            _local_path,
-            _parquet_dir_exists,
-            _write_control_parquet,
-        )
-
         for s in cls._retrain_stages(path):
-            live = _local_path(f"{path}/{s}")
+            live = storage.local_path(f"{path}/{s}")
             staged = live + ".__retrain__"
             aside = live + ".__retrain_old__"
             if os.path.isdir(staged):
@@ -1975,14 +1955,14 @@ class VectorIndex:
                     )
                 os.rename(aside, live)
             shutil.rmtree(aside, ignore_errors=True)
-        if _parquet_dir_exists(f"{path}/tombstones"):
+        if storage.parquet_dir_exists(f"{path}/tombstones"):
             # the retrained stages were built from the LIVE corpus, so
             # committed tombstones are resolved; a crash before this
             # clear is view-identical (the ids are absent, the
             # anti-join is a no-op) — clearing keeps the fast
             # no-tombstone load path
-            _write_control_parquet(f"{path}/tombstones", [], "id bigint")
-        shutil.rmtree(_local_path(f"{path}/{cls._RETRAIN_MARKER}"))
+            storage.write_control_parquet(f"{path}/tombstones", [], "id bigint")
+        shutil.rmtree(storage.local_path(f"{path}/{cls._RETRAIN_MARKER}"))
 
     @classmethod
     def repair_torn_retrain(cls, spark, path: str) -> bool:
@@ -1999,22 +1979,20 @@ class VectorIndex:
         import os
         import shutil
 
-        from .textops import _local_path, _parquet_dir_exists
-
-        if _parquet_dir_exists(f"{path}/{cls._RETRAIN_MARKER}"):
+        if storage.parquet_dir_exists(f"{path}/{cls._RETRAIN_MARKER}"):
             cls._finish_retrain(path)
             return True
         purged = False
         for s in cls._retrain_stages(path):
             for suffix in (".__retrain__", ".__retrain_old__"):
-                d = _local_path(f"{path}/{s}{suffix}")
+                d = storage.local_path(f"{path}/{s}{suffix}")
                 if os.path.isdir(d):
-                    if not os.path.isdir(_local_path(f"{path}/{s}")):
+                    if not os.path.isdir(storage.local_path(f"{path}/{s}")):
                         # defensive: no marker means no swap ever
                         # started, so a missing live stage alongside a
                         # surviving copy can only be manual damage —
                         # restore rather than destroy the last copy
-                        os.rename(d, _local_path(f"{path}/{s}"))
+                        os.rename(d, storage.local_path(f"{path}/{s}"))
                     else:
                         shutil.rmtree(d)
                     purged = True
@@ -2079,18 +2057,11 @@ class VectorIndex:
     ) -> dict:
         import shutil
 
-        from .textops import (
-            _local_path,
-            _parquet_dir_exists,
-            _read_control_row,
-            _write_control_parquet,
-        )
-
         cls.repair_torn_retrain(spark, path)
-        m = _read_control_row(f"{path}/meta")
+        m = storage.read_control_row(f"{path}/meta")
         id_col, vec_col = m["id_col"], m["vec_col"]
         live = corpus
-        if _parquet_dir_exists(f"{path}/tombstones"):
+        if storage.parquet_dir_exists(f"{path}/tombstones"):
             t = (
                 spark.read.parquet(f"{path}/tombstones")
                 .select(F.col("id").alias(id_col))
@@ -2141,10 +2112,11 @@ class VectorIndex:
         stages = cls._retrain_stages(path)
         for s in stages:
             staged = f"{path}/{s}.__retrain__"
-            shutil.rmtree(_local_path(staged), ignore_errors=True)
+            shutil.rmtree(storage.local_path(staged), ignore_errors=True)
             frame = getattr(idx, s)
             if s == "codes" and (
-                "bucket" in spark.read.parquet(f"{path}/{s}").columns
+                "bucket"
+                in storage.read_parquet_pinned(spark, f"{path}/{s}").columns
                 or cls._layout_dir_stage(path, "codes")
             ):
                 # keep the serving layout through a retrain (round 11);
@@ -2161,7 +2133,7 @@ class VectorIndex:
                 frame = frame.sort("id")
             frame.write.mode("overwrite").parquet(staged)
         # commit point: every staging directory is complete on disk
-        _write_control_parquet(
+        storage.write_control_parquet(
             f"{path}/{cls._RETRAIN_MARKER}",
             [(int(n_lists), int(n_iter))],
             "n_lists int, n_iter int",
@@ -2201,9 +2173,9 @@ class VectorIndex:
         An as-of index is READ-ONLY against the original directory:
         the ``*_saved`` mutations refuse (appending from a historical
         view would fork the monotone id log)."""
-        from .textops import TornStateError, _parquet_dir_exists
+        from .textops import TornStateError
 
-        if _parquet_dir_exists(f"{path}/{cls._RETRAIN_MARKER}"):
+        if storage.parquet_dir_exists(f"{path}/{cls._RETRAIN_MARKER}"):
             raise TornStateError(
                 f"VectorIndex.load: {path} holds a committed but "
                 "unfinished coarse-quantizer retrain (retrain_pending "
@@ -2213,9 +2185,7 @@ class VectorIndex:
         idx = cls.__new__(cls)
         idx._df = None
         idx._seed_col = None
-        from .textops import _read_control_row
-
-        m = _read_control_row(f"{path}/meta")
+        m = storage.read_control_row(f"{path}/meta")
         idx._id_col = m["id_col"]
         idx._vec_col = m["vec_col"]
         idx._m = m["m"]
@@ -2224,18 +2194,17 @@ class VectorIndex:
         # unknown (None) — the first save()/append_saved() stamps it
         hi = m.get("max_id")
         idx.max_id = None if hi is None else int(hi)
-        from .textops import _read_parquet_pinned
-
         for stage in cls._STAGES:
-            setattr(idx, f"_{stage}", _read_parquet_pinned(spark, f"{path}/{stage}"))
-        from .textops import _parquet_dir_exists
-
+            setattr(
+                idx, f"_{stage}",
+                storage.read_parquet_pinned(spark, f"{path}/{stage}"),
+            )
         for stage in cls._REFINE_STAGES:
             setattr(
                 idx,
                 f"_{stage}",
-                _read_parquet_pinned(spark, f"{path}/{stage}")
-                if _parquet_dir_exists(f"{path}/{stage}")
+                storage.read_parquet_pinned(spark, f"{path}/{stage}")
+                if storage.parquet_dir_exists(f"{path}/{stage}")
                 else None,
             )
         idx.builds = dict.fromkeys(cls._STAGES + cls._REFINE_STAGES, 0)
@@ -2243,8 +2212,8 @@ class VectorIndex:
 
         idx._tombstones = None
         idx._tomb_delta = None
-        if _parquet_dir_exists(f"{path}/tombstones"):
-            t = _read_parquet_pinned(
+        if storage.parquet_dir_exists(f"{path}/tombstones"):
+            t = storage.read_parquet_pinned(
                 spark, f"{path}/tombstones"
             ).select("id").distinct()
             # an empty log (a compact()'s cleared state) serves as no
@@ -2266,44 +2235,28 @@ class VectorIndex:
 
 
 def foreach_batch_add(spark, index_path: str):
-    """Structured-Streaming ingestion into a saved vector index: a
-    ``(batch_df, batch_id) -> None`` function for
-    ``writeStream.foreachBatch`` that absorbs each micro-batch as one
-    frozen-quantizer :meth:`VectorIndex.update` + O(delta)
-    :meth:`VectorIndex.append_saved` — the continuous form of the
-    serving-index add() path, mirroring
-    :func:`incremental.foreach_batch_update` for curation state
-    (tests prove streamed ingestion equals one batch update).
+    """Structured-Streaming ingestion into a saved vector index: each
+    micro-batch lands as one frozen-quantizer
+    :meth:`VectorIndex.update` + O(delta)
+    :meth:`VectorIndex.append_saved`, under the at-least-once absorb
+    contract of :mod:`.storage` (``max_id`` is the high-water mark;
+    tests prove streamed ingestion equals one batch update). An index
+    saved over an EMPTY corpus has no mark and untrained quantizers
+    (nothing to encode a delta against) and is refused with that
+    cause.
 
-    At-least-once safety rides on the same monotone-id contract: the
-    saved meta's ``max_id`` is the high-water mark, a fully REPLAYED
-    batch (``max(id) <= max_id``) is skipped idempotently, and a
-    PARTIALLY overlapping batch raises — re-appending half a batch
-    would duplicate its list/code rows. The append itself is two
-    parquet appends + a meta rewrite (non-atomic, the engine's
-    documented seam; a transactional table format makes it a single
-    commit), and that seam is disk-guarded: before absorbing, the
-    on-disk ``corpus_lists`` max id is compared against the meta
-    stamp — rows beyond the stamp mean a prior append landed without
-    its meta rewrite, and the absorber re-stamps meta when the batch
-    is fully present (exact list/code row counts) or raises on a torn
-    partial append, never re-appends."""
+    The append itself is two parquet appends + a meta rewrite
+    (non-atomic; a transactional table format makes it a single
+    commit), and that seam is disk-guarded: rows on disk beyond the
+    meta stamp mean a prior append landed without its meta rewrite,
+    and the absorber re-stamps meta when the batch is fully present
+    (exact list/code row counts) or raises on a torn partial append,
+    never re-appends."""
 
     def absorb(batch_df: DataFrame, batch_id: int) -> None:
         idx = VectorIndex.load(spark, index_path)
-        b = batch_df.agg(
-            F.min(idx._id_col).alias("lo"), F.max(idx._id_col).alias("hi")
-        ).first()
-        if b["hi"] is None:
-            return
-        if idx.max_id is None:
-            # no high-water mark — refuse either way, with the cause:
-            # a meta predating the mark (re-save stamps it) makes
-            # replay detection impossible, and an index saved over an
-            # EMPTY corpus has untrained quantizers (nothing to encode
-            # a delta against — FAISS's add-before-train error); both
-            # would silently break the documented idempotence/serving
-            # contract if absorbed.
+
+        def refuse_untrained() -> None:
             if idx.corpus_lists.first() is None:
                 raise ValueError(
                     "foreach_batch_add: the saved index was built over an "
@@ -2311,23 +2264,15 @@ def foreach_batch_add(spark, index_path: str):
                     "the first real corpus snapshot before attaching "
                     "streamed ingestion"
                 )
-            raise ValueError(
-                "foreach_batch_add: the saved index has no max_id "
-                "high-water mark (meta predates it) — re-save() the "
-                "index (which stamps it) before attaching streamed "
-                "ingestion"
-            )
-        if b["hi"] <= idx.max_id:
-            return  # fully-replayed batch — already absorbed
-        if b["lo"] <= idx.max_id:
-            raise ValueError(
-                "foreach_batch_add: monotone-id contract violated — batch "
-                f"ids straddle the saved high-water mark {idx.max_id} "
-                f"(lo={b['lo']}, hi={b['hi']}); re-appending part of a "
-                "batch would duplicate its rows"
-            )
+
+        b = storage.monotone_batch(
+            batch_df, idx._id_col, idx.max_id, "foreach_batch_add",
+            on_missing_mark=refuse_untrained,
+        )
+        if b is None:
+            return
         # torn-append guard (the disk-side half of the high-water-mark
-        # contract, mirroring RepeatIndex.foreach_batch_update's corpus
+        # contract, mirroring storage.append_corpus_log's corpus
         # guard): append_saved writes corpus_lists, then codes, then
         # meta — a crash before the meta rewrite leaves appended rows
         # ABOVE the stamped max_id, and the replayed batch would pass
@@ -2394,32 +2339,18 @@ def foreach_batch_add(spark, index_path: str):
 
 def foreach_batch_retract(spark, index_path: str):
     """Structured-Streaming DELETION feed into a saved vector index —
-    the deletion twin of :func:`foreach_batch_add` (real pipelines
-    consume opt-out / takedown streams the same way they consume
-    ingestion streams): a ``(batch_df, batch_id) -> None`` function
-    for ``writeStream.foreachBatch`` that lands each micro-batch of
-    corpus ids as one O(delta) :meth:`VectorIndex.retract` +
-    :meth:`VectorIndex.retract_saved`.
-
-    At-least-once safety comes from the tombstone SET semantics plus a
-    pre-filter: ids already tombstoned (a replayed batch, a duplicate
-    deletion request across batches, or the landed half of a torn
-    multi-file append) are dropped before retract(), so every replay
-    converges and duplicate requests are absorbed silently — the loud
-    unknown-id refusal stays for ids that were never in the corpus."""
+    the deletion twin of :func:`foreach_batch_add`: each micro-batch
+    of corpus ids lands as one O(delta) :meth:`VectorIndex.retract` +
+    :meth:`VectorIndex.retract_saved`, under the at-least-once absorb
+    contract of :mod:`.storage` (tombstoned ids are the ledger). The
+    loud unknown-id refusal stays for ids that were never in the
+    corpus."""
 
     def absorb(batch_df: DataFrame, batch_id: int) -> None:
         idx = VectorIndex.load(spark, index_path)
-        ids = batch_df.select(
-            F.col(batch_df.columns[0]).cast("long").alias("id")
-        ).distinct()
-        if idx._tombstones is not None:
-            ids = ids.join(
-                F.broadcast(idx._tombstones), "id", "left_anti"
-            )
-        ids = ids.localCheckpoint()
-        if ids.first() is None:
-            return  # fully absorbed already
+        ids = storage.unretracted_ids(batch_df, idx._tombstones)
+        if ids is None:
+            return
         idx.retract(ids)
         idx.retract_saved(index_path)
 

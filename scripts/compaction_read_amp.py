@@ -25,6 +25,8 @@ import sys
 import tempfile
 import time
 
+from lp_etl_plugins_spark import storage
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_DELTAS = 6
@@ -40,8 +42,6 @@ def main() -> None:
     from lp_etl_plugins_spark.incremental import CurationState
     from lp_etl_plugins_spark.session import get_spark
     from lp_etl_plugins_spark.tables import load_table
-    from lp_etl_plugins_spark.textops import _count_data_files
-
     spark = get_spark("compaction-read-amp", cpus=os.cpu_count() or 8)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -68,7 +68,7 @@ def main() -> None:
                 "contam", "index/bands", "index/pairs", "index/verified")
 
         def probe() -> dict:
-            out = {"files": {s: _count_data_files(f"{path}/{s}") for s in subs}}
+            out = {"files": {s: storage.count_data_files(f"{path}/{s}") for s in subs}}
             for name, mk in (("working_read_s", st.working),
                              ("curated_read_s", st.curated)):
                 best = min(

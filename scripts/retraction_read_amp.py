@@ -30,6 +30,8 @@ import sys
 import tempfile
 import time
 
+from lp_etl_plugins_spark import storage
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CHECKPOINTS = (1, 4, 16, 64)
@@ -43,9 +45,7 @@ def _timed(fn) -> float:
 
 
 def _probe(read_fn, path: str, ledger: str) -> dict:
-    from lp_etl_plugins_spark.textops import _count_data_files, _parquet_dir_exists
-
-    files = _count_data_files(f"{path}/{ledger}") if _parquet_dir_exists(
+    files = storage.count_data_files(f"{path}/{ledger}") if storage.parquet_dir_exists(
         f"{path}/{ledger}"
     ) else 0
     return {

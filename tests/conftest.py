@@ -30,25 +30,14 @@ _PRIORITY_FILES = (
 # streamed-vs-batch equality and update/retract==rebuild harnesses
 # (whose query-level truth oracle parity already gates vs DuckDB
 # every round) — are long-tail-expensive and re-verify internal
-# contracts, not query results; they run in the explicit heavy lane
-# (`pytest tests/ -m slow`). Matched by name here so a new battery
-# lands in the right lane without a per-test decoration. Oracle
-# parity never leaves the default lane.
-_SLOW_NAME_PATTERNS = (
-    "crash", "torn", "chaos", "replay", "kill", "storm", "_property",
-    "uncommitted", "vacuum", "resurrect", "repairs", "pending_marker",
-    "equals_batch", "equals_rebuild", "absorber", "prefix_rebuild",
-)
+# contracts, not query results; each carries an explicit
+# ``@pytest.mark.slow`` (or a module-level ``pytestmark``) and runs in
+# the explicit heavy lane (`pytest tests/ -m slow`). Oracle parity
+# never leaves the default lane.
 
 
 def pytest_collection_modifyitems(config, items):
     rank = {name: i for i, name in enumerate(_PRIORITY_FILES)}
-
-    for item in items:
-        if item.path.name == "test_oracle_parity.py":
-            continue
-        if any(p in item.name for p in _SLOW_NAME_PATTERNS):
-            item.add_marker(pytest.mark.slow)
 
     def key(item):
         return rank.get(item.path.name, len(_PRIORITY_FILES))

@@ -70,6 +70,7 @@ def _staged_lm(spark, tmp_path) -> tuple:
     return docs, path, c1, c2, hi
 
 
+@pytest.mark.slow
 def test_trigram_asof_equals_prefix_rebuild(spark, tmp_path):
     docs, path, c1, c2, hi = _staged_lm(spark, tmp_path)
     for cut in (c1, c2, hi):

@@ -11,8 +11,8 @@ zone.
 
 Interception is at driver-write granularity (each
 ``DataFrameWriter.parquet`` call and each control-plane
-``_write_control_parquet``) — clean boundaries between writes, which
-is exactly the granularity the concurrent write sets make
+``storage.write_control_parquet``) — clean boundaries between writes,
+which is exactly the granularity the concurrent write sets make
 unpredictable (a ThreadPoolExecutor absorb crashes with an ARBITRARY
 landed subset, not a prefix). Torn multi-file states INSIDE one
 parquet write are covered by the dedicated per-family tests.
@@ -40,6 +40,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from lp_etl_plugins_spark import incremental as INC
+from lp_etl_plugins_spark import storage
 from lp_etl_plugins_spark import textops as T
 from lp_etl_plugins_spark import vectorops as V
 from lp_etl_plugins_spark.multimodal import MediaIndex, foreach_batch_add, synthetic_media
@@ -51,7 +52,6 @@ from lp_etl_plugins_spark.textops import DedupIndex, TrigramLM
 pytestmark = pytest.mark.slow
 
 
-
 class SimulatedCrash(Exception):
     pass
 
@@ -59,7 +59,7 @@ class SimulatedCrash(Exception):
 @contextmanager
 def crash_after(n: int):
     """Fail the (n+1)-th driver-level write — DataFrameWriter.parquet
-    or a control-plane _write_control_parquet — with SimulatedCrash.
+    or a control-plane storage.write_control_parquet — with SimulatedCrash.
     Thread-safe: concurrent absorber writes share the countdown, so a
     kill inside a thread-pooled write set leaves an arbitrary landed
     subset. Yields the state dict ({"left": remaining})."""
@@ -68,7 +68,7 @@ def crash_after(n: int):
     lock = threading.Lock()
     state = {"left": int(n)}
     real_pq = DataFrameWriter.parquet
-    real_ctrl = T._write_control_parquet
+    real_ctrl = storage.write_control_parquet
 
     def _tick(what: str) -> None:
         with lock:
@@ -85,12 +85,12 @@ def crash_after(n: int):
         return real_ctrl(path, rows, schema)
 
     DataFrameWriter.parquet = fake_pq
-    T._write_control_parquet = fake_ctrl
+    storage.write_control_parquet = fake_ctrl
     try:
         yield state
     finally:
         DataFrameWriter.parquet = real_pq
-        T._write_control_parquet = real_ctrl
+        storage.write_control_parquet = real_ctrl
 
 
 def _key(t):
@@ -206,12 +206,12 @@ def _vector_manual_repair(spark, path: str) -> None:
     """The absorber's documented 'repair the index directory': purge
     rows beyond the meta stamp from the monotone stages (the SQ8
     refine stage included when the layout carries it)."""
-    stamp = int(T._read_control_row(f"{path}/meta")["max_id"])
+    stamp = int(storage.read_control_row(f"{path}/meta")["max_id"])
     stages = [("corpus_lists", "id"), ("codes", "neighbor_id")]
-    if T._parquet_dir_exists(f"{path}/sq8_codes"):
+    if storage.parquet_dir_exists(f"{path}/sq8_codes"):
         stages.append(("sq8_codes", "id"))
     for stage, idc in stages:
-        T._rewrite_parquet_dir(
+        storage.rewrite_parquet_dir(
             spark,
             f"{path}/{stage}",
             spark.read.parquet(f"{path}/{stage}").filter(F.col(idc) <= stamp),
@@ -312,7 +312,7 @@ def test_chaos_crash_compact_preserves_views(spark, tmp_path_factory, data):
     is view-preserving substrate by substrate), and re-running compact
     from the torn state converges. (The between-renames swap window —
     not reachable at write granularity — is covered by the dedicated
-    swap-window tests and `_recover_swapped_dir`.)"""
+    swap-window tests and `storage.recover_swapped_dir`.)"""
     env = _chaos_env(spark, tmp_path_factory)
     family = data.draw(st.sampled_from(FAMILIES))
     spec = env[family]

@@ -27,6 +27,7 @@ from conftest import SF_SMOKE
 from pyspark.sql import functions as F
 
 from lp_etl_plugins_spark import incremental as INC
+from lp_etl_plugins_spark import storage
 from lp_etl_plugins_spark import textops as T
 
 
@@ -139,13 +140,14 @@ def test_asof_view_is_readonly_membership_only(spark, tmp_path):
     assert st.manifest().count() == 2
 
 
+@pytest.mark.slow
 def test_torn_manifest_row_invisible_and_replay_overwrites(spark, tmp_path):
     docs, cut = _split(spark)
     p = str(tmp_path / "state")
     st = INC.CurationState.build(spark, docs.filter(F.col("doc_id") <= cut), p)
     # a torn commit: manifest row landed (under its deterministic
     # mseq-named file, as the real write path lands it), meta did not
-    T._append_control_parquet(
+    storage.append_control_parquet(
         f"{p}/manifest",
         [(1, "update", int(cut) + 50, 1, 0, 0, 999)],
         INC._MANIFEST_SCHEMA,

@@ -9,8 +9,12 @@ timing, so they are stable on any machine.
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from conftest import SF_SMOKE
 
+from lp_etl_plugins_spark import storage
 from lp_etl_plugins_spark.inventory import textops as IT
 from lp_etl_plugins_spark.inventory import vectorops as IV
 
@@ -23,16 +27,22 @@ def test_index_is_cached_per_session_and_dir(spark):
     assert IT.dedup_index(spark, SF_SMOKE + "/") is not idx1
 
 
-def test_each_substrate_builds_exactly_once(spark):
-    idx = IT.dedup_index(spark, SF_SMOKE)
+def test_each_substrate_builds_exactly_once(spark, tmp_path):
+    # a per-test corpus path (a symlink to the smoke corpus) keys a
+    # FRESH session index, so builds by earlier tests on SF_SMOKE (the
+    # oracle-parity run forces verified_clusters) cannot leak into the
+    # absolute counts below
+    sf = str(tmp_path / "sf")
+    os.symlink(SF_SMOKE, sf)
+    idx = IT.dedup_index(spark, sf)
     before = dict(idx.builds)
     # hit every consumer twice; counters may each advance at most to 1
     for _ in range(2):
-        IT.t3_minhash_lsh_pairs(spark, SF_SMOKE)
-        IT.t4_lsh_jaccard_verify(spark, SF_SMOKE)
-        IT.t10_dedup_clusters(spark, SF_SMOKE).collect()
-        IT.t26_canonical_dedup(spark, SF_SMOKE).collect()
-        IT.t29_source_overlap(spark, SF_SMOKE).collect()
+        IT.t3_minhash_lsh_pairs(spark, sf)
+        IT.t4_lsh_jaccard_verify(spark, sf)
+        IT.t10_dedup_clusters(spark, sf).collect()
+        IT.t26_canonical_dedup(spark, sf).collect()
+        IT.t29_source_overlap(spark, sf).collect()
     assert idx.builds == {
         "bands": 1, "pairs": 1, "verified": 1, "clusters": 1,
         "verified_clusters": 0,
@@ -340,7 +350,7 @@ def test_compact_saved_index_pure_relayout(spark, tmp_path):
     target file count with row content untouched — load() serves
     identical frames before and after."""
     from lp_etl_plugins_spark.inventory.textops import _docs
-    from lp_etl_plugins_spark.textops import DedupIndex, _count_data_files
+    from lp_etl_plugins_spark.textops import DedupIndex
     from pyspark.sql import functions as F
 
     docs = _docs(spark, SF_SMOKE)
@@ -358,7 +368,7 @@ def test_compact_saved_index_pure_relayout(spark, tmp_path):
         live = DedupIndex.load(spark, path)
 
     before = {s: _stage_rows(live, s) for s in DedupIndex._STAGES}
-    files_before = _count_data_files(f"{path}/pairs")
+    files_before = storage.count_data_files(f"{path}/pairs")
     assert files_before >= 3  # base + two appended deltas
 
     metrics = DedupIndex.compact(spark, path)
@@ -414,7 +424,7 @@ def test_trigram_lm_load_pre_column_meta(spark, tmp_path):
     """A model saved before the meta gained text_col/id_col (n-only
     schema) loads with the historical defaults instead of crashing."""
     from lp_etl_plugins_spark.inventory.textops import _docs
-    from lp_etl_plugins_spark.textops import TrigramLM, _single_partition_df
+    from lp_etl_plugins_spark.textops import TrigramLM
 
     docs = _docs(spark, SF_SMOKE).selectExpr("doc_id as id", "text")
     lm = TrigramLM(docs, "text", "id")
@@ -423,7 +433,7 @@ def test_trigram_lm_load_pre_column_meta(spark, tmp_path):
     want = sorted(
         tuple(r) for r in lm.score(docs.filter("id < 20")).collect()
     )
-    _single_partition_df(spark, [(3,)], "n int").write.mode(
+    storage.single_partition_df(spark, [(3,)], "n int").write.mode(
         "overwrite"
     ).parquet(f"{path}/meta")
     re = TrigramLM.load(spark, path)
@@ -434,6 +444,7 @@ def test_trigram_lm_load_pre_column_meta(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_compact_swap_crash_windows(spark, tmp_path):
     """r7 ADVICE: the rewrite swap renames the OLD directory aside
     before renaming the new one in, so a complete copy exists on disk
@@ -445,7 +456,7 @@ def test_compact_swap_crash_windows(spark, tmp_path):
     import shutil
 
     from lp_etl_plugins_spark.inventory.textops import _docs
-    from lp_etl_plugins_spark.textops import DedupIndex, _rewrite_parquet_dir
+    from lp_etl_plugins_spark.textops import DedupIndex
 
     docs = _docs(spark, SF_SMOKE)
     idx = DedupIndex(docs, "text", "doc_id")
@@ -474,7 +485,7 @@ def test_compact_swap_crash_windows(spark, tmp_path):
     shutil.rmtree(p + ".__old__")
     assert _stage_rows(DedupIndex.load(spark, path), "pairs") == before
     # and a later compact over the recovered dir is clean
-    m = _rewrite_parquet_dir(
+    m = storage.rewrite_parquet_dir(
         spark, p, spark.read.parquet(p), 1 << 20
     )
     assert m["files_after"] == 1
@@ -496,6 +507,7 @@ from hypothesis import strategies as hst
     n_noise=hst.integers(min_value=1, max_value=6),
     cap=hst.integers(min_value=2, max_value=8),
 )
+@pytest.mark.slow
 def test_band_cap_exactness_property(spark, n_boiler, n_noise, cap):
     """VERDICT r7 #3 — cap-triggered exactness on adversarial shapes:
     a planted boilerplate group of random size (same passage + unique
@@ -555,6 +567,7 @@ def test_band_cap_exactness_property(spark, n_boiler, n_noise, cap):
         assert full - got == only_big
 
 
+@pytest.mark.slow
 def test_streamed_ingestion_equals_batch(spark, tmp_path):
     """Micro-batch ingestion through DedupIndex.foreach_batch_update
     (the standalone index's absorber, r8 — completing the family):
@@ -624,9 +637,7 @@ def test_streamed_ingestion_equals_batch(spark, tmp_path):
     with _pytest.raises(ValueError, match="straddle"):
         absorb(strad, 100)
     # pre-mark meta (legacy save) is refused loudly
-    from lp_etl_plugins_spark.textops import _write_control_parquet
-
-    _write_control_parquet(
+    storage.write_control_parquet(
         f"{path}/meta",
         [("text", "doc_id", 3, 12, 6, 2, 0.8, None)],
         "text_col string, id_col string, shingle_n int, k int, bands int, "
@@ -641,6 +652,7 @@ def test_streamed_ingestion_equals_batch(spark, tmp_path):
         )
 
 
+@pytest.mark.slow
 def test_absorber_repairs_torn_index_half(spark, tmp_path):
     """Round-8 seam closure: a crash INSIDE the index half's
     multi-stage append (after the corpus log landed, before the meta
@@ -729,7 +741,7 @@ def test_xxhash64_family_end_to_end(spark, tmp_path):
     family so deltas hash identically to the original build, and a
     legacy meta (no hash_family column) loads as md5."""
     from lp_etl_plugins_spark.inventory.textops import _docs
-    from lp_etl_plugins_spark.textops import DedupIndex, _write_control_parquet
+    from lp_etl_plugins_spark.textops import DedupIndex
     from pyspark.sql import functions as F
 
     real = _docs(spark, SF_SMOKE).select("doc_id", "text")
@@ -767,7 +779,7 @@ def test_xxhash64_family_end_to_end(spark, tmp_path):
     assert _stage_rows(loaded, "pairs") == _stage_rows(full, "pairs")
 
     # legacy meta (pre-family layout) loads as the md5 family
-    _write_control_parquet(
+    storage.write_control_parquet(
         f"{path}/meta",
         [("text", "doc_id", 3, 12, 6, 2, 0.8, None, int(hi))],
         "text_col string, id_col string, shingle_n int, k int, bands int, "
@@ -859,7 +871,7 @@ def test_high_water_mark_covers_unshingleable_docs(spark, tmp_path):
     rows — a corpus or batch whose max-id document is too short to
     shingle previously understated max_doc_id (bands max), leaving
     that batch permanently replaying through the redo branch."""
-    from lp_etl_plugins_spark.textops import DedupIndex, _read_control_row
+    from lp_etl_plugins_spark.textops import DedupIndex
 
     rows = [
         (i, f"alpha beta gamma delta epsilon zeta eta theta run {i}")
@@ -870,7 +882,7 @@ def test_high_water_mark_covers_unshingleable_docs(spark, tmp_path):
     docs.write.parquet(corpus_dir)
     path = str(tmp_path / "idx")
     DedupIndex(spark.read.parquet(corpus_dir), "text", "doc_id").save(path)
-    assert _read_control_row(f"{path}/meta")["max_doc_id"] == 8
+    assert storage.read_control_row(f"{path}/meta")["max_doc_id"] == 8
 
     # a streamed batch ENDING in a short doc: stamp covers it, replay
     # is a clean idempotent skip (not a redo), state unchanged
@@ -881,7 +893,7 @@ def test_high_water_mark_covers_unshingleable_docs(spark, tmp_path):
     )
     absorb = DedupIndex.foreach_batch_update(spark, path, corpus_dir)
     absorb(delta, 0)
-    assert _read_control_row(f"{path}/meta")["max_doc_id"] == 10
+    assert storage.read_control_row(f"{path}/meta")["max_doc_id"] == 10
     before = sorted(
         tuple(r) for r in spark.read.parquet(f"{path}/bands").collect()
     )

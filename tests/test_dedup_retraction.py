@@ -16,7 +16,8 @@ from conftest import SF_SMOKE
 from pyspark.sql import functions as F
 
 from lp_etl_plugins_spark import maintenance as M
-from lp_etl_plugins_spark.textops import DedupIndex, _read_control_row
+from lp_etl_plugins_spark import storage
+from lp_etl_plugins_spark.textops import DedupIndex
 
 
 def _docs(spark):
@@ -33,6 +34,7 @@ STAGES = ("bands", "pairs", "verified", "clusters", "verified_clusters")
 SUB = "doc_id % 7 = 3"
 
 
+@pytest.mark.slow
 def test_retract_equals_rebuild_all_stages(spark, tmp_path):
     """In-memory and persisted: every stage equals a from-scratch
     build over the survivors (uncapped configuration — exact)."""
@@ -58,7 +60,7 @@ def test_retract_equals_rebuild_all_stages(spark, tmp_path):
     for s in STAGES:
         assert _rows(getattr(served, s)) == want[s], s
     assert M.check_dedup_index(spark, p)["ok"]
-    m = _read_control_row(f"{p}/meta")
+    m = storage.read_control_row(f"{p}/meta")
     assert m["n_retractions"] == 1
     assert m["max_doc_id"] == docs.agg(F.max("doc_id")).first()[0]
 
@@ -99,6 +101,7 @@ def test_bridge_retraction_splits_cluster(spark, tmp_path):
     assert _rows(idx.clusters) == want
 
 
+@pytest.mark.slow
 def test_crash_windows_and_replay(spark, tmp_path):
     """Uncommitted ledger rows leave every reader pre-retract, the
     probe reports them, compact/append refuse, a different retraction
@@ -183,7 +186,7 @@ def test_compact_resolves_then_update_composes(spark, tmp_path):
     idem = DedupIndex.load(spark, p)
     idem.retract(sub_ids)
     idem.retract_saved(p)
-    assert _read_control_row(f"{p}/meta")["n_retractions"] == 1
+    assert storage.read_control_row(f"{p}/meta")["n_retractions"] == 1
     # PARTIAL overlap is the caller bug that refuses
     with pytest.raises(ValueError, match="already\n?\\s*retracted"):
         DedupIndex.load(spark, p).retract(

@@ -17,6 +17,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from lp_etl_plugins_spark import storage
 from lp_etl_plugins_spark.incremental import CurationState
 
 from conftest import SF_SMOKE
@@ -232,6 +233,7 @@ def test_monotone_contract_enforced(spark, tmp_path):
         st.update(docs.filter("doc_id == 40"))
 
 
+@pytest.mark.slow
 def test_streamed_ingestion_equals_batch_rebuild(spark, tmp_path):
     """Micro-batch ingestion through foreach_batch_update: two delta
     files drained oldest-first (maxFilesPerTrigger=1 + availableNow),
@@ -309,6 +311,7 @@ _doc = st.lists(st.sampled_from(_VOCAB), min_size=1, max_size=14).map(" ".join)
     bench_mask=st.lists(st.booleans(), min_size=22, max_size=22),
     cut_frac=st.floats(min_value=0.3, max_value=1.0),
 )
+@pytest.mark.slow
 def test_incremental_equals_rebuild_property(spark, texts, bench_mask, cut_frac):
     """Random tiny-vocab corpora force what crafted cases can't
     enumerate: exact-dup collisions across the split, chains of
@@ -343,6 +346,7 @@ def test_incremental_equals_rebuild_property(spark, texts, bench_mask, cut_frac)
         shutil.rmtree(d2, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_check_detects_torn_state(spark, tmp_path):
     """The integrity probe: a freshly built and updated state passes
     every invariant; a simulated torn update (a tombstone written
@@ -369,8 +373,6 @@ def test_compaction_preserves_views_and_composes_with_update(spark, tmp_path):
     keep check() green — and a LATER update over the compacted state
     must still equal a full rebuild (compaction is transparent to the
     incremental contract)."""
-    from lp_etl_plugins_spark.textops import _count_data_files
-
     docs = spark.createDataFrame(
         _crafted_rows(), "doc_id long, source string, text string"
     )
@@ -397,7 +399,7 @@ def test_compaction_preserves_views_and_composes_with_update(spark, tmp_path):
 
     before = _views(st)
     files_before = {
-        sub: _count_data_files(f"{path}/{sub}")
+        sub: storage.count_data_files(f"{path}/{sub}")
         for sub in ("working", "grams", "indexed")
     }
     metrics = st.compact()
@@ -587,6 +589,7 @@ def test_check_reports_missing_index_stages(spark, tmp_path):
     assert res["violations"].get("index_stage_missing_pairs") == 1
 
 
+@pytest.mark.slow
 def test_update_repairs_torn_write_sequence(spark, tmp_path):
     """Round-8 commit protocol: a crash anywhere inside update()'s
     write sequence (index → indexed → hashes → working → tombstones →
@@ -605,8 +608,6 @@ def test_update_repairs_torn_write_sequence(spark, tmp_path):
     exercised, not just appends."""
     import os
     import shutil
-
-    from lp_etl_plugins_spark import textops as T
 
     docs = spark.createDataFrame(
         _crafted_rows(), "doc_id long, source string, text string"
@@ -632,8 +633,8 @@ def test_update_repairs_torn_write_sequence(spark, tmp_path):
         snap = {s: rows(path, s) for s in SUBS if s != "index"}
         for st in STAGES:
             snap[f"index/{st}"] = rows(path, f"index/{st}")
-        snap["meta"] = T._read_control_row(f"{path}/meta")
-        snap["index_meta"] = T._read_control_row(f"{path}/index/meta")
+        snap["meta"] = storage.read_control_row(f"{path}/meta")
+        snap["index_meta"] = storage.read_control_row(f"{path}/index/meta")
         return snap
 
     want = snapshot(clean_dir)
@@ -661,7 +662,7 @@ def test_update_repairs_torn_write_sequence(spark, tmp_path):
             # both complete copies beside it
             os.rename(f"{case}/contam", f"{case}/contam.__old__")
             shutil.copytree(f"{clean_dir}/contam", f"{case}/contam.__compact__")
-        T._write_control_parquet(
+        storage.write_control_parquet(
             f"{case}/pending", [(int(b["lo"]), int(b["hi"]))], "lo bigint, hi bigint"
         )
         return case
@@ -694,15 +695,14 @@ def test_update_repairs_torn_write_sequence(spark, tmp_path):
     assert CurationState.load(spark, cases[4]).check()["ok"]
 
 
+@pytest.mark.slow
 def test_check_reports_mid_swap_crash(spark, tmp_path):
     """A crash between a rename-aside swap's two renames (compact(),
     update()'s contam swap) leaves NO live directory at the substrate
     path. check() must REPORT that (substrate_missing_*) rather than
     crash on the read — it exists for post-crash triage — and recovery
-    is the one rename _recover_swapped_dir performs."""
+    is the one rename storage.recover_swapped_dir performs."""
     import os
-
-    from lp_etl_plugins_spark.textops import _recover_swapped_dir
 
     docs = spark.createDataFrame(
         _crafted_rows(), "doc_id long, source string, text string"
@@ -715,10 +715,11 @@ def test_check_reports_mid_swap_crash(spark, tmp_path):
     assert not res["ok"]
     assert res["violations"] == {"substrate_missing_working": 1}
 
-    assert _recover_swapped_dir(f"{p}/working") is True
+    assert storage.recover_swapped_dir(f"{p}/working") is True
     assert CurationState.load(spark, p).check(index_stages=False)["ok"]
 
 
+@pytest.mark.slow
 def test_compact_refuses_pending_marker(spark, tmp_path):
     """r8 ADVICE (medium): compact() while a dangling `pending` marker
     shows a crashed update must REFUSE — its working rewrite resolves
@@ -733,7 +734,7 @@ def test_compact_refuses_pending_marker(spark, tmp_path):
     ).filter("doc_id < 100")
     p = str(tmp_path / "inc")
     st = CurationState.build(spark, docs, p, bench_source="bench")
-    T._write_control_parquet(f"{p}/pending", [(500, 600)], "lo bigint, hi bigint")
+    storage.write_control_parquet(f"{p}/pending", [(500, 600)], "lo bigint, hi bigint")
 
     with pytest.raises(ValueError, match="pending update marker"):
         st.compact()
@@ -752,8 +753,6 @@ def test_check_reports_mid_swap_tombstones(spark, tmp_path):
     reporting."""
     import os
 
-    from lp_etl_plugins_spark.textops import _recover_swapped_dir
-
     docs = spark.createDataFrame(
         _crafted_rows(), "doc_id long, source string, text string"
     ).filter("doc_id < 100")
@@ -765,10 +764,11 @@ def test_check_reports_mid_swap_tombstones(spark, tmp_path):
     assert not res["ok"]
     assert res["violations"] == {"substrate_missing_tombstones": 1}
 
-    assert _recover_swapped_dir(f"{p}/tombstones") is True
+    assert storage.recover_swapped_dir(f"{p}/tombstones") is True
     assert CurationState.load(spark, p).check(index_stages=False)["ok"]
 
 
+@pytest.mark.slow
 def test_repair_replay_never_rewrites_pending_marker(spark, tmp_path, monkeypatch):
     """r8 ADVICE (low): on a repair replay the on-disk marker already
     holds the delta's bounds — rewriting it reopens the control-swap
@@ -789,7 +789,7 @@ def test_repair_replay_never_rewrites_pending_marker(spark, tmp_path, monkeypatc
     p = str(tmp_path / "inc")
     CurationState.build(spark, base, p, bench_source="bench")
     # crash window: marker landed, nothing else did
-    T._write_control_parquet(
+    storage.write_control_parquet(
         f"{p}/pending", [(int(b["lo"]), int(b["hi"]))], "lo bigint, hi bigint"
     )
 

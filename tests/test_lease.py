@@ -22,6 +22,7 @@ from conftest import SF_SMOKE
 from pyspark.sql import functions as F
 
 from lp_etl_plugins_spark import maintenance as M
+from lp_etl_plugins_spark import storage
 from lp_etl_plugins_spark.lease import LeaseContention, dir_lease
 from lp_etl_plugins_spark.textops import TrigramLM
 
@@ -104,6 +105,7 @@ def test_lease_refuses_concurrent_mutations(spark, tmp_path):
     assert TrigramLM.compact(spark, path)["counts"]["files_after"] == 1
 
 
+@pytest.mark.slow
 def test_two_threads_absorber_vs_compact_serialize_or_refuse(spark, tmp_path):
     """The deployment pair from the verdict: an absorber thread and a
     maintenance thread on the same directory. With the fence, one of
@@ -151,6 +153,7 @@ def test_two_threads_absorber_vs_compact_serialize_or_refuse(spark, tmp_path):
     assert got == want, results
 
 
+@pytest.mark.slow
 def test_vacuum_skips_and_reports_contended_path(spark, tmp_path):
     """The nightly sweep must not race a live absorber: under
     contention it reports lease_contention_skipped_compact and leaves
@@ -162,18 +165,16 @@ def test_vacuum_skips_and_reports_contended_path(spark, tmp_path):
         lm.update(docs.filter(f"doc_id >= {lo} and doc_id < {hi}"))
         lm.append_saved(path)
 
-    from lp_etl_plugins_spark.textops import _count_data_files
-
-    frag = _count_data_files(f"{path}/counts")
+    frag = storage.count_data_files(f"{path}/counts")
     assert frag >= 3
     with dir_lease(path, role="absorber"):
         row = M.vacuum(spark, [path], max_files_per_substrate=1).collect()[0]
     assert row["ok"] and not row["compacted"]
     assert "lease_contention_skipped_compact=1" in row["violations"]
-    assert _count_data_files(f"{path}/counts") == frag
+    assert storage.count_data_files(f"{path}/counts") == frag
     # writer gone: the next sweep compacts
     row = M.vacuum(spark, [path], max_files_per_substrate=1).collect()[0]
-    assert row["compacted"] and _count_data_files(f"{path}/counts") == 1
+    assert row["compacted"] and storage.count_data_files(f"{path}/counts") == 1
 
 
 def test_stale_lease_expires_and_breaks_once(spark, tmp_path):
@@ -224,6 +225,7 @@ def test_curation_state_update_vs_compact_fenced(spark, tmp_path):
     assert st.check(index_stages=False)["ok"]
 
 
+@pytest.mark.slow
 def test_lease_mutual_exclusion_under_thread_storm(tmp_path):
     """Pure-protocol stress: 16 threads × 25 acquire attempts (with a
     planted STALE lease at the start, so the break-by-rename path is
@@ -352,6 +354,7 @@ def test_waiting_scope_is_thread_local(tmp_path):
     assert outcome["elapsed"] < 1.0, outcome  # no inherited wait
 
 
+@pytest.mark.slow
 def test_vacuum_waits_out_live_writer(spark, tmp_path):
     """vacuum(lease_wait_seconds=N) serializes behind a short-lived
     absorber instead of deferring the compaction to the next sweep."""
@@ -361,9 +364,7 @@ def test_vacuum_waits_out_live_writer(spark, tmp_path):
         lm.update(docs.filter(f"doc_id >= {lo} and doc_id < {hi}"))
         lm.append_saved(path)
 
-    from lp_etl_plugins_spark.textops import _count_data_files
-
-    assert _count_data_files(f"{path}/counts") >= 3
+    assert storage.count_data_files(f"{path}/counts") >= 3
 
     release = threading.Event()
     held = threading.Event()
@@ -385,4 +386,4 @@ def test_vacuum_waits_out_live_writer(spark, tmp_path):
     timer.cancel()
     assert row["compacted"], row
     assert "lease_contention" not in row["violations"]
-    assert _count_data_files(f"{path}/counts") == 1
+    assert storage.count_data_files(f"{path}/counts") == 1

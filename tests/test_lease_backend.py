@@ -171,6 +171,7 @@ def test_injected_backend_lost_stale_break_race(tmp_path):
     assert fake.read_holder(lease) == "fresh writer"
 
 
+@pytest.mark.slow
 def test_injected_backend_thread_storm(tmp_path):
     """The round-8 storm test against the seam: 16 threads x 25
     attempts with a planted stale lease; at no instant two holders."""

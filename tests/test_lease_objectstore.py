@@ -263,6 +263,7 @@ def test_conditional_release_cannot_yank_new_holder(tmp_path):
     assert not store.held(lease)
 
 
+@pytest.mark.slow
 def test_thread_storm_under_latency(tmp_path):
     """The round-8 storm against the bound backend WITH network
     latency: 16 threads x 12 attempts, planted stale lease, at no

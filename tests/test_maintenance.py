@@ -8,10 +8,12 @@ untouched; unhealthy → never compacted by default).
 
 from __future__ import annotations
 
+import pytest
 from conftest import SF_SMOKE
 from pyspark.sql import functions as F
 
 from lp_etl_plugins_spark import maintenance as M
+from lp_etl_plugins_spark import storage
 from lp_etl_plugins_spark.multimodal import MediaIndex, synthetic_media
 from lp_etl_plugins_spark.textops import DedupIndex, RepeatIndex, TrigramLM
 from lp_etl_plugins_spark.vectorops import VectorIndex
@@ -45,6 +47,7 @@ def _build_all(spark, tmp_path):
     return paths
 
 
+@pytest.mark.slow
 def test_vacuum_detects_families_and_catches_corruption(spark, tmp_path):
     paths = _build_all(spark, tmp_path)
 
@@ -110,6 +113,7 @@ def test_vacuum_detects_families_and_catches_corruption(spark, tmp_path):
     assert row["family"] == "unknown" and not row["ok"]
 
 
+@pytest.mark.slow
 def test_vacuum_threshold_compaction_policy(spark, tmp_path):
     """Healthy + fragmented past the threshold → compacted (and still
     healthy, fewer files); healthy + under threshold → untouched."""
@@ -127,21 +131,19 @@ def test_vacuum_threshold_compaction_policy(spark, tmp_path):
         )
         live.append_saved(path)
 
-    from lp_etl_plugins_spark.textops import _count_data_files
-
-    frag = _count_data_files(f"{path}/phash")
+    frag = storage.count_data_files(f"{path}/phash")
     assert frag >= 3
 
     # threshold above the fragmentation: untouched
     row = M.vacuum(spark, [path], max_files_per_substrate=1000).collect()[0]
     assert row["ok"] and not row["compacted"]
-    assert _count_data_files(f"{path}/phash") == frag
+    assert storage.count_data_files(f"{path}/phash") == frag
 
     # threshold below: compacted, healthy, single-file stages
     row = M.vacuum(spark, [path], max_files_per_substrate=2).collect()[0]
     assert row["ok"] and row["compacted"]
     assert row["max_files_after"] <= row["max_files_before"]
-    assert _count_data_files(f"{path}/phash") == 1
+    assert storage.count_data_files(f"{path}/phash") == 1
     # and the compacted index still serves identically
     full = MediaIndex(media)
     re = MediaIndex.load(spark, path)
@@ -149,6 +151,7 @@ def test_vacuum_threshold_compaction_policy(spark, tmp_path):
     assert sorted(tuple(r) for r in re.clusters.collect()) == want
 
 
+@pytest.mark.slow
 def test_vacuum_recognizes_mid_swap_crashed_state(spark, tmp_path):
     """A substrate caught between a rename-aside swap's two renames
     must not demote the state to family='unknown' — detect_family
@@ -238,6 +241,7 @@ def test_check_vector_index_reports_degenerate_coarse_assignment(
     assert res["violations"].get("coarse_assignment_degenerate") == 1
 
 
+@pytest.mark.slow
 def test_vacuum_recover_swaps_repairs_mid_swap_states(spark, tmp_path):
     """Round 9: vacuum(recover_swaps=True) performs the one-rename
     recovery for mid-swap crash states (including the control-plane
@@ -279,6 +283,7 @@ def test_vacuum_recover_swaps_repairs_mid_swap_states(spark, tmp_path):
     assert row["recovered"] == 0 and row["ok"]
 
 
+@pytest.mark.slow
 def test_vacuum_purges_abandoned_torn_retractions(spark, tmp_path):
     """purge_torn_retractions=True rolls an ABANDONED torn retraction
     back to the exact pre-retract state — uncommitted ledger + derived
@@ -374,6 +379,7 @@ def test_vacuum_purges_abandoned_torn_retractions(spark, tmp_path):
     assert row["ok"] and "purged_torn_retraction=1" in row["violations"]
 
 
+@pytest.mark.slow
 def test_vacuum_purge_handles_media_and_noop_paths(spark, tmp_path):
     """The MediaIndex branch of the purge (single label stage) and the
     no-op guarantees: a healthy path and a committed-retraction path
@@ -413,6 +419,7 @@ def test_vacuum_purge_handles_media_and_noop_paths(spark, tmp_path):
         assert rows(getattr(served, s)) == want[s], s
 
 
+@pytest.mark.slow
 def test_vacuum_tombstone_pressure_triggers_and_settles(spark, tmp_path):
     """Round 10 (VERDICT r9 #6): the retraction analogue of the
     file-count threshold. A committed retraction ledger above
@@ -425,8 +432,6 @@ def test_vacuum_tombstone_pressure_triggers_and_settles(spark, tmp_path):
     audit ledger forever)."""
     from lp_etl_plugins_spark.inventory.textops import _docs
     from lp_etl_plugins_spark.inventory.vectorops import _emb
-    from lp_etl_plugins_spark.textops import _parquet_dir_exists
-
     # --- VectorIndex: log-clearing family ---
     emb = _emb(spark, SF_SMOKE)
     vp = str(tmp_path / "vidx")
@@ -457,9 +462,9 @@ def test_vacuum_tombstone_pressure_triggers_and_settles(spark, tmp_path):
     assert "tombstone_pressure=1" in row["violations"]
     # the audit ledger survives the compact, but the resolution stamp
     # keeps the trigger from re-firing on it
-    assert _parquet_dir_exists(f"{dp}/retracted")
+    assert storage.parquet_dir_exists(f"{dp}/retracted")
     assert spark.read.parquet(f"{dp}/retracted").count() > 0
-    assert _parquet_dir_exists(f"{dp}/retracted_resolved")
+    assert storage.parquet_dir_exists(f"{dp}/retracted_resolved")
     row = M.vacuum(spark, [dp]).collect()[0]
     assert not row["compacted"], row
     assert "tombstone_pressure" not in row["violations"]
@@ -473,6 +478,7 @@ def test_vacuum_tombstone_pressure_triggers_and_settles(spark, tmp_path):
     assert "tombstone_pressure=1" in row["violations"]
 
 
+@pytest.mark.slow
 def test_vacuum_tombstone_pressure_below_threshold_and_disabled(
     spark, tmp_path
 ):

@@ -15,6 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from lp_etl_plugins_spark import storage
 from lp_etl_plugins_spark.multimodal import MediaIndex, synthetic_media
 
 
@@ -43,6 +44,7 @@ def test_param_guards(spark):
         MediaIndex(media, n_bands=4, max_hamming=4)
 
 
+@pytest.mark.slow
 def test_update_equals_rebuild(spark):
     """The daily-delta gate: base build + frozen-params update equals
     a from-scratch build over the union, stage-for-stage — with the
@@ -128,19 +130,17 @@ def test_loaded_update_needs_no_old_media(spark, tmp_path):
 def test_append_saved_is_delta_only_and_compact_relayouts(spark, tmp_path):
     import os
 
-    from lp_etl_plugins_spark.textops import _count_data_files
-
     media = synthetic_media(spark, 200)
     base = media.filter(F.col("media_id") < 150)
     delta = media.filter(F.col("media_id") >= 150)
     path = str(tmp_path / "midx")
     MediaIndex(base).save(path)
-    phash_files_before = _count_data_files(f"{path}/phash")
+    phash_files_before = storage.count_data_files(f"{path}/phash")
 
     live = MediaIndex.load(spark, path)
     live.update(delta)
     live.append_saved(path)
-    assert _count_data_files(f"{path}/phash") > phash_files_before
+    assert storage.count_data_files(f"{path}/phash") > phash_files_before
     with pytest.raises(ValueError, match="no update"):
         live.append_saved(path)
 
@@ -176,6 +176,7 @@ def test_session_cache_identity_and_consumers(spark):
     assert idx1.builds["phash"] == 1
 
 
+@pytest.mark.slow
 def test_streamed_ingestion_equals_batch(spark, tmp_path):
     """Micro-batch ingestion through multimodal.foreach_batch_add:
     two monotone delta files drained oldest-first, each absorbed as
@@ -315,14 +316,12 @@ def test_update_with_band_cap_is_monotone_superset(spark):
 def test_precap_meta_loads_uncapped(spark, tmp_path):
     """Metas saved before the skew cap existed (round-8 mid-round
     layout, no max_band_size column) must load as uncapped indexes."""
-    from lp_etl_plugins_spark.textops import _write_control_parquet
-
     media = synthetic_media(spark, 40)
     idx = MediaIndex(media)
     n_pairs = idx.pairs.count()
     path = str(tmp_path / "midx")
     idx.save(path)
-    _write_control_parquet(
+    storage.write_control_parquet(
         f"{path}/meta",
         [("media_id", 4, 3, 39)],
         "id_col string, n_bands int, max_hamming int, max_id bigint",

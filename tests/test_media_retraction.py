@@ -14,9 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from lp_etl_plugins_spark import maintenance as M
+from lp_etl_plugins_spark import storage
 from lp_etl_plugins_spark.multimodal import MediaIndex, synthetic_media
-from lp_etl_plugins_spark.textops import _read_control_row
-
 STAGES = ("phash", "pairs", "clusters")
 
 
@@ -30,6 +29,7 @@ def _sub_ids(media):
     )
 
 
+@pytest.mark.slow
 def test_retract_equals_rebuild_all_stages(spark, tmp_path):
     media = synthetic_media(spark, 200)
     keep = media.filter("media_id % 7 != 3")
@@ -52,10 +52,11 @@ def test_retract_equals_rebuild_all_stages(spark, tmp_path):
     for s in STAGES:
         assert _rows(getattr(served, s)) == want[s], s
     assert M.check_media_index(spark, p)["ok"]
-    m = _read_control_row(f"{p}/meta")
+    m = storage.read_control_row(f"{p}/meta")
     assert m["n_retractions"] == 1 and m["max_id"] == 199
 
 
+@pytest.mark.slow
 def test_crash_windows_replay_and_compact(spark, tmp_path):
     media = synthetic_media(spark, 200)
     keep = media.filter("media_id % 7 != 3")
@@ -100,7 +101,7 @@ def test_crash_windows_replay_and_compact(spark, tmp_path):
     r3 = MediaIndex.load(spark, p)
     r3.retract(sub)
     r3.retract_saved(p)
-    assert _read_control_row(f"{p}/meta")["n_retractions"] == 1
+    assert storage.read_control_row(f"{p}/meta")["n_retractions"] == 1
     with pytest.raises(ValueError, match="already\n?\\s*retracted"):
         MediaIndex.load(spark, p).retract(
             sub.unionByName(spark.createDataFrame([(0,)], "id long"))
@@ -144,7 +145,7 @@ def test_update_after_retraction_composes_and_repair_respects_tombstones(
     idx = MediaIndex.load(spark, p)
     idx.update(delta)
     idx.append_saved(p)
-    assert _read_control_row(f"{p}/meta")["n_retractions"] == 1
+    assert storage.read_control_row(f"{p}/meta")["n_retractions"] == 1
     want_idx = MediaIndex(keep.unionByName(delta))
     served = MediaIndex.load(spark, p)
     for s in STAGES:
@@ -165,6 +166,7 @@ def test_update_after_retraction_composes_and_repair_respects_tombstones(
     assert M.check_media_index(spark, p)["ok"]
 
 
+@pytest.mark.slow
 def test_vacuum_reports_torn_retraction_instead_of_crashing(spark, tmp_path):
     """The sweep's report-don't-crash contract under
     compact_unhealthy=True: a torn retraction makes the family compact

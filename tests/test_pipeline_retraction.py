@@ -48,6 +48,7 @@ def _assert_views_equal(got, want, ctx=""):
         assert got[v] == want[v], (ctx, v)
 
 
+@pytest.mark.slow
 def test_retract_equals_rebuild_with_reelection(spark, tmp_path):
     """Retract the CANONICALS of multi-member verified clusters plus a
     slice of ordinary docs: surviving members must re-elect winners
@@ -85,6 +86,7 @@ def test_retract_equals_rebuild_with_reelection(spark, tmp_path):
     _assert_views_equal(_views(st2), want, "replayed")
 
 
+@pytest.mark.slow
 def test_resurrection_and_compact(spark, tmp_path):
     """A canonical DISPLACED by an update is resurrected when its
     displacer is retracted — via an append-only counter-record, and
@@ -129,6 +131,7 @@ def test_resurrection_and_compact(spark, tmp_path):
     )
 
 
+@pytest.mark.slow
 def test_retract_after_resurrect_same_watermark(spark, tmp_path):
     """The round-10 review find: retractions never advance the id
     watermark, so a resurrection (retraction R1) and a LATER
@@ -223,6 +226,7 @@ def test_refusals(spark, tmp_path):
     assert st.retract(r1.limit(0))["retracted"] == 0
 
 
+@pytest.mark.slow
 def test_uncommitted_ledger_blocks_update_and_compact_vacuum_completes(
     spark, tmp_path
 ):
@@ -289,6 +293,7 @@ def test_retracted_text_no_longer_suppresses_reingestion(spark, tmp_path):
     ), "re-ingested copy of a retracted text must index"
 
 
+@pytest.mark.slow
 def test_absorber_streamed_equals_one_batch(spark, tmp_path):
     """Two deletion micro-batches through foreach_batch_retract end in
     the same views as one retract() of the union — the pipeline

@@ -8,6 +8,7 @@ frame), so example counts stay low while value coverage stays high.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -153,6 +154,7 @@ def test_char_ngrams_matches_python_reference(spark, texts):
         assert got[i] == want, (t, got[i], want)
 
 
+@pytest.mark.slow
 @settings(**_SETTINGS)
 @given(st.lists(st.tuples(_iri, _iri, _text, _lang), min_size=1, max_size=25))
 def test_triples_repo_roundtrip_property(spark, tmp_path_factory, rows):
@@ -397,6 +399,7 @@ def _model_not_exists(base_rows, right_rows, shared):
     ),
     pattern_ix=st.integers(min_value=0, max_value=len(_MINUS_PATTERNS) - 1),
 )
+@pytest.mark.slow
 def test_minus_vs_not_exists_algebra_property(spark, triples, base, pattern_ix):
     """Random BGPs against random solution sets (with genuinely unbound
     variables in the base) pin the full MINUS / NOT EXISTS split that

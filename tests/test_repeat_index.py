@@ -28,6 +28,7 @@ def _docs(spark):
     return _inv_docs(spark, SF_SMOKE).select("doc_id", "text")
 
 
+@pytest.mark.slow
 def test_update_equals_rebuild_real_corpus(spark, tmp_path):
     docs = _docs(spark)
     idx = RepeatIndex.build(
@@ -148,6 +149,7 @@ def test_disjointness_contract_and_empty_delta(spark, tmp_path):
         idx.update(dup, old_docs=base)
 
 
+@pytest.mark.slow
 def test_streamed_ingestion_equals_batch(spark, tmp_path):
     """Micro-batch ingestion through foreach_batch_update: two
     monotone delta files drained oldest-first, each appended to the
@@ -209,6 +211,7 @@ def test_streamed_ingestion_equals_batch(spark, tmp_path):
         absorb(strad, 100)
 
 
+@pytest.mark.slow
 def test_foreach_batch_update_detects_torn_multifile_corpus_append(
     spark, tmp_path
 ):
@@ -264,6 +267,7 @@ _text = st.lists(st.sampled_from(_W), min_size=1, max_size=12).map(" ".join)
         st.floats(min_value=0.2, max_value=0.9),
     ),
 )
+@pytest.mark.slow
 def test_repeat_update_equals_rebuild_property(spark, texts, cuts):
     """VERDICT r7 #8 — the RepeatIndex twin of the CurationState
     property: random tiny-vocab corpora with random disjoint splits

@@ -17,7 +17,8 @@ from conftest import SF_SMOKE
 from pyspark.sql import functions as F
 
 from lp_etl_plugins_spark import maintenance as M
-from lp_etl_plugins_spark.textops import RepeatIndex, _read_control_row
+from lp_etl_plugins_spark import storage
+from lp_etl_plugins_spark.textops import RepeatIndex
 
 
 def _docs(spark):
@@ -43,6 +44,7 @@ def corpus(spark):
     )
 
 
+@pytest.mark.slow
 def test_retract_equals_rebuild_with_flips(spark, tmp_path, corpus):
     """The hash-gate shape: retract == build on survivors, with the
     backward flip path actually exercised (touched_old > 0), and the
@@ -58,7 +60,7 @@ def test_retract_equals_rebuild_with_flips(spark, tmp_path, corpus):
     assert _rows(idx.spans()) == want
     assert _rows(RepeatIndex.load(spark, p).spans()) == want
     assert M.check_repeat_index(spark, p)["ok"]
-    m = _read_control_row(f"{p}/meta")
+    m = storage.read_control_row(f"{p}/meta")
     assert m["n_retractions"] == 1
     # retraction consumed a generation (its upserts are committed)
     assert m["n_updates"] == 1
@@ -98,6 +100,7 @@ def test_delete_sentinel_removes_last_repeat(spark, tmp_path):
     assert M.check_repeat_index(spark, p)["ok"]
 
 
+@pytest.mark.slow
 def test_crash_windows_converge_on_replay(spark, tmp_path, corpus):
     """Each prefix of {ledger, span upserts, meta} leaves a state the
     probe reports; the same-ids replay purges its uncommitted halves

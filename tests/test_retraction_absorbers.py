@@ -15,6 +15,7 @@ LM) in micro-batches. Contracts pinned here, per family:
 
 from __future__ import annotations
 
+import pytest
 from conftest import SF_SMOKE
 from pyspark.sql import functions as F
 
@@ -22,6 +23,8 @@ from lp_etl_plugins_spark import textops as T
 from lp_etl_plugins_spark import vectorops as V
 from lp_etl_plugins_spark import multimodal as MM
 from lp_etl_plugins_spark.maintenance import vacuum
+
+pytestmark = pytest.mark.slow
 
 
 def _docs(spark):

@@ -48,18 +48,21 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+@pytest.mark.slow
 def test_tumbling_stream_equals_batch(spark, event_dir):
     batch = streaming.tumbling_counts(spark.read.parquet(event_dir))
     streamed = _stream_result(spark, event_dir, streaming.tumbling_counts, "tumbling_mem")
     assert _rows(streamed) == _rows(batch)
 
 
+@pytest.mark.slow
 def test_sliding_stream_equals_batch(spark, event_dir):
     batch = streaming.sliding_counts(spark.read.parquet(event_dir))
     streamed = _stream_result(spark, event_dir, streaming.sliding_counts, "sliding_mem")
     assert _rows(streamed) == _rows(batch)
 
 
+@pytest.mark.slow
 def test_session_stream_equals_batch(spark, event_dir):
     batch = streaming.session_stats(spark.read.parquet(event_dir))
     streamed = _stream_result(spark, event_dir, streaming.session_stats, "session_mem")
@@ -115,6 +118,7 @@ def test_stateful_totals_across_microbatches(spark, tmp_path_factory):
         assert abs(ss - s) < 1e-9
 
 
+@pytest.mark.slow
 def test_dedup_stream_equals_batch(spark, event_dir, tmp_path_factory):
     """Watermarked streaming dedup (dropDuplicatesWithinWatermark) over
     an input with planted duplicates produces exactly the batch-distinct
@@ -143,6 +147,7 @@ def test_dedup_stream_equals_batch(spark, event_dir, tmp_path_factory):
     assert streamed.count() < spark.read.parquet(dup_dir).count()
 
 
+@pytest.mark.slow
 def test_enrich_stream_equals_batch(spark, event_dir):
     """Stream-static enrichment join: the streamed events joined with
     the static customer dim produce the batch answer."""
@@ -165,6 +170,7 @@ def test_enrich_stream_equals_batch(spark, event_dir):
     assert _rows(spark.table("enrich_mem")) == _rows(batch)
 
 
+@pytest.mark.slow
 def test_interval_join_stream_equals_batch(spark, event_dir):
     """Stream-stream interval join (click→purchase attribution): the
     watermarked streaming join must produce exactly the batch pairs.
@@ -229,6 +235,7 @@ def test_parquet_sink_recovers_exactly_once(spark, tmp_path_factory):
     assert got.select("event_id").distinct().count() == batch.count()
 
 
+@pytest.mark.slow
 def test_hll_registers_stream_equals_batch(spark, event_dir):
     """Incremental sketch maintenance: readStream register state equals
     the batch registers, and the batch finisher over the streamed
@@ -241,6 +248,7 @@ def test_hll_registers_stream_equals_batch(spark, event_dir):
     )
 
 
+@pytest.mark.slow
 def test_outer_interval_join_stream_equals_batch(spark, event_dir):
     """Stream-stream LEFT OUTER interval join: matched pairs equal the
     batch pairs exactly; NULL-purchase rows (the 'click with no
@@ -313,6 +321,7 @@ def test_outer_interval_join_stream_equals_batch(spark, event_dir):
     assert extra.count() == 0
 
 
+@pytest.mark.slow
 def test_session_timeout_stream_equals_batch(spark, event_dir):
     """The TIMER-based stateful operator: sessions closed by an
     in-batch gap emit immediately; the trailing open session emits
@@ -361,206 +370,15 @@ def test_session_timeout_stream_equals_batch(spark, event_dir):
     assert batch.filter(F.col("n_events") > 1).count() > 0
 
 
-def test_session_processor_timer_logic_without_spark_runtime():
-    """Drive the v2 StatefulProcessor directly (stubbed handle/state/
-    timers): in-batch gaps close sessions inline; the registered timer
-    moves to last + gap; an expired timer emits the open session and
-    clears state — the timer path that transformWithStateInPandas
-    would exercise where its runtime exists."""
-    import pandas as pd
-
-    class _StubState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def clear(self):
-            self._v = None
-
-    class _StubHandle:
-        def __init__(self):
-            self.states = {}
-            self.timers = set()
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, _StubState())
-
-        def registerTimer(self, ts):
-            self.timers.add(ts)
-
-        def deleteTimer(self, ts):
-            self.timers.discard(ts)
-
-    proc = streaming.make_session_processor(gap_secs=100)
-    handle = _StubHandle()
-    proc.init(handle)
-
-    # batch 1: two sessions' worth of events — the first closes inline
-    out1 = list(proc.handleInputRows(
-        (7,), iter([pd.DataFrame({"sec": [10, 20, 300], "value": [1.0, 2.0, 5.0]})]), None
-    ))
-    assert len(out1) == 1
-    r = out1[0].iloc[0]
-    assert (r["user_id"], r["session_start"], r["session_end"], r["n_events"], r["sum_value"]) == (7, 10, 20, 2, 3.0)
-    assert handle.timers == {(300 + 100) * 1000}
-
-    # batch 2: extends the open session; timer re-registers
-    out2 = list(proc.handleInputRows(
-        (7,), iter([pd.DataFrame({"sec": [350], "value": [1.5]})]), None
-    ))
-    assert out2 == []
-    assert handle.timers == {(350 + 100) * 1000}
-
-    # watermark passes: the timer fires, open session emits, state clears
-    out3 = list(proc.handleExpiredTimer((7,), None, None))
-    r3 = out3[0].iloc[0]
-    assert (r3["session_start"], r3["session_end"], r3["n_events"], r3["sum_value"]) == (300, 350, 2, 6.5)
-    assert not handle.states["sess"].exists()
-    assert list(proc.handleExpiredTimer((7,), None, None)) == []
+def test_round2_is_half_up():
+    """The pandas emit paths round like Spark's ``F.round`` (HALF_UP at
+    2 dp), so a sum landing on a half-cent boundary can't break
+    stream == batch equality; Python's built-in round would give 3.0."""
+    assert streaming._round2(1.005 + 2.0) == 3.01
+    assert streaming._round2(1.005 + 2.0 + 0.005) == 3.01
 
 
-def test_stateful_v2_runtime_equivalence(spark, tmp_path_factory):
-    """Batch equivalence of the PRIMARY transformWithStateInPandas path
-    — runs automatically wherever the v2 runtime exists (protobuf +
-    RocksDB provider, e.g. a production deployment image) and skips
-    here, where _tws_available gates to the fallback. The fallback's
-    equivalence is covered unconditionally by
-    test_stateful_totals_across_microbatches; this closes the gap that
-    the v2 call itself was only stub-tested (ADVICE r5)."""
-    if not streaming._tws_available(spark):
-        pytest.skip("transformWithState v2 runtime unavailable (needs protobuf + RocksDB provider)")
-
-    path = str(tmp_path_factory.mktemp("events_state_v2") / "events")
-    load_table(spark, SF, "events").repartition(3).write.mode("overwrite").parquet(path)
-    batch_df = spark.read.parquet(path)
-    batch = {r["user_id"]: (r["n_events"], r["sum_value"])
-             for r in streaming.user_totals(batch_df).collect()}
-    stream = (
-        spark.readStream.schema(batch_df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-        .transform(streaming.stateful_user_totals)
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("stateful_v2_mem")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    emitted = spark.table("stateful_v2_mem")
-    final = (
-        emitted.groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "sum_value")).alias("last"))
-        .select("user_id", "last.n_events", "last.sum_value")
-    )
-    streamed = {r["user_id"]: (r["n_events"], r["sum_value"]) for r in final.collect()}
-    assert streamed.keys() == batch.keys()
-    for uid, (n, s) in batch.items():
-        sn, ss = streamed[uid]
-        assert sn == n and abs(ss - s) < 1e-9
-
-
-def test_stateful_v2_gate_and_processor_shape(spark):
-    """The v2 arbitrary-state path is gated on BOTH the protobuf
-    runtime and a RocksDB-configured session. In this container the
-    gate must be False (fallback active); even where protobuf IS
-    importable (simulated below), a session on the default HDFS
-    state store provider must still gate False — protobuf presence
-    alone is an incidental proxy that would flip the implementation
-    onto a provider that rejects it at runtime. The
-    StatefulProcessor factory must still construct a processor with
-    the v2 lifecycle hooks (it only needs protobuf at RUN time)."""
-    import sys
-    import types
-
-    assert streaming._tws_available(spark) is False  # no protobuf baked in
-
-    # Simulate a protobuf-bearing environment: the gate must STILL be
-    # False because the session's provider is the HDFS default.
-    fake_pb = types.ModuleType("google.protobuf")
-    fake_pb.descriptor = types.ModuleType("google.protobuf.descriptor")
-    saved = {k: sys.modules.get(k) for k in
-             ("google", "google.protobuf", "google.protobuf.descriptor")}
-    try:
-        google_mod = types.ModuleType("google")
-        google_mod.protobuf = fake_pb
-        sys.modules["google"] = google_mod
-        sys.modules["google.protobuf"] = fake_pb
-        sys.modules["google.protobuf.descriptor"] = fake_pb.descriptor
-        assert streaming._tws_available(spark) is False  # provider gate
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                sys.modules.pop(k, None)
-            else:
-                sys.modules[k] = v
-
-    proc = streaming.make_totals_processor()
-    for hook in ("init", "handleInputRows", "close"):
-        assert callable(getattr(proc, hook))
-
-
-def test_totals_processor_logic_without_spark_runtime():
-    """Drive the v2 StatefulProcessor directly (stubbed handle +
-    ValueState): in this container the transformWithState runtime
-    can't execute, but the processor's accumulate-and-emit logic can —
-    totals accumulate across calls exactly like the fallback path and
-    the batch twin (count, sum rounded to 2 at emission only)."""
-    import pandas as pd
-
-    class _StubState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class _StubHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, _StubState())
-
-    proc = streaming.make_totals_processor()
-    handle = _StubHandle()
-    proc.init(handle)
-
-    out1 = list(proc.handleInputRows(
-        (7,), iter([pd.DataFrame({"value": [1.005, 2.0]})]), None
-    ))
-    assert len(out1) == 1
-    r1 = out1[0].iloc[0]
-    # HALF_UP at 2dp, matching Spark F.round: 3.005 -> 3.01 (Python's
-    # built-in round would give 3.0 here)
-    assert (r1["user_id"], r1["n_events"], r1["sum_value"]) == (7, 2, 3.01)
-
-    # second micro-batch: state carries; rounding happens at emission,
-    # not in the accumulator (1.005 + 2.0 + 0.005 = 3.01, not 3.0+0.005)
-    out2 = list(proc.handleInputRows(
-        (7,), iter([pd.DataFrame({"value": [0.005]})]), None
-    ))
-    r2 = out2[0].iloc[0]
-    assert (r2["n_events"], r2["sum_value"]) == (3, 3.01)
-    proc.close()
-
-
+@pytest.mark.slow
 def test_histogram_registers_stream_equals_batch(spark, event_dir):
     """The quantile-sketch sibling of the HLL test: stream-maintained
     bucket registers equal the batch registers, the finisher over the

@@ -27,11 +27,8 @@ from conftest import SF_SMOKE
 from pyspark.sql import functions as F
 
 from lp_etl_plugins_spark import maintenance as M
-from lp_etl_plugins_spark.textops import (
-    TrigramLM,
-    _count_data_files,
-    _read_control_row,
-)
+from lp_etl_plugins_spark import storage
+from lp_etl_plugins_spark.textops import TrigramLM
 
 
 def _docs(spark):
@@ -65,16 +62,16 @@ def test_append_saved_matches_rebuild_then_compacts(spark, tmp_path):
     )
     path = str(tmp_path / "lm")
     TrigramLM(base, "text", "doc_id").save(path)
-    assert _read_control_row(f"{path}/meta")["max_id"] == 299
+    assert storage.read_control_row(f"{path}/meta")["max_id"] == 299
 
     for delta in (d1, d2):
         lm = TrigramLM.load(spark, path)
         lm.update(delta)
         lm.append_saved(path)
-    assert _read_control_row(f"{path}/meta")["max_id"] == int(
+    assert storage.read_control_row(f"{path}/meta")["max_id"] == int(
         docs.agg(F.max("doc_id")).first()[0]
     )
-    assert _count_data_files(f"{path}/counts") >= 3  # base + two segments
+    assert storage.count_data_files(f"{path}/counts") >= 3  # base + two segments
 
     full = TrigramLM(docs, "text", "doc_id")
     want_counts = sorted(tuple(r) for r in full.counts.collect())
@@ -127,9 +124,7 @@ def test_append_saved_contracts(spark, tmp_path):
         lm.append_saved(path)
 
     # pre-mark meta (legacy n-only save) is refused loudly
-    from lp_etl_plugins_spark.textops import _write_control_parquet
-
-    _write_control_parquet(
+    storage.write_control_parquet(
         f"{path}/meta",
         [(3, "text", "doc_id")],
         "n int, text_col string, id_col string",
@@ -142,6 +137,7 @@ def test_append_saved_contracts(spark, tmp_path):
         TrigramLM.foreach_batch_update(spark, path)(delta, 0)
 
 
+@pytest.mark.slow
 def test_streamed_ingestion_equals_batch(spark, tmp_path):
     """Micro-batch ingestion through TrigramLM.foreach_batch_update:
     two monotone delta files drained oldest-first, each absorbed as
@@ -183,7 +179,7 @@ def test_streamed_ingestion_equals_batch(spark, tmp_path):
     assert _counts_view(spark, path) == sorted(
         tuple(r) for r in full.counts.collect()
     )
-    assert _read_control_row(f"{path}/meta")["max_id"] == hi
+    assert storage.read_control_row(f"{path}/meta")["max_id"] == hi
     probe = docs.filter("doc_id % 7 = 0")
     got = TrigramLM.load(spark, path).score(probe, "text", "doc_id")
     assert sorted(tuple(r) for r in got.collect()) == sorted(
@@ -204,6 +200,7 @@ def test_streamed_ingestion_equals_batch(spark, tmp_path):
         absorb(strad, 100)
 
 
+@pytest.mark.slow
 def test_absorber_repairs_crash_windows(spark, tmp_path):
     """A crash at any seam of the append protocol (segment append →
     meta stamp) must CONVERGE on replay to exactly the clean-absorb
@@ -224,7 +221,7 @@ def test_absorber_repairs_crash_windows(spark, tmp_path):
     shutil.copytree(base_dir, clean_dir)
     TrigramLM.foreach_batch_update(spark, clean_dir)(delta, 0)
     want_raw = _raw_rows(spark, clean_dir)
-    want_meta = _read_control_row(f"{clean_dir}/meta")
+    want_meta = storage.read_control_row(f"{clean_dir}/meta")
     want_view = _counts_view(spark, clean_dir)
 
     def make_case(tag, *, landed_frac=None, stamp=False, purge_window=False):
@@ -265,7 +262,7 @@ def test_absorber_repairs_crash_windows(spark, tmp_path):
     for case in cases:
         TrigramLM.foreach_batch_update(spark, case)(delta, 1)  # the replay
         assert _raw_rows(spark, case) == want_raw, case
-        assert _read_control_row(f"{case}/meta") == want_meta, case
+        assert storage.read_control_row(f"{case}/meta") == want_meta, case
         assert _counts_view(spark, case) == want_view, case
         assert M.vacuum(spark, [case]).collect()[0]["ok"], case
 
@@ -289,6 +286,7 @@ _text = st.lists(st.sampled_from(_W), min_size=0, max_size=10).map(" ".join)
         st.floats(min_value=0.2, max_value=0.9),
     ),
 )
+@pytest.mark.slow
 def test_trigram_chained_appends_equal_rebuild_property(
     spark, tmp_path_factory, texts, cuts
 ):
@@ -335,6 +333,7 @@ def _ids_df(spark, docs, pred):
     return docs.filter(pred).select(F.col("doc_id").alias("id"))
 
 
+@pytest.mark.slow
 def test_retract_equals_rebuild_in_memory_and_persisted(spark, tmp_path):
     """subtract == rebuild, both for the in-memory model and through
     save → retract → retract_saved → load; scores agree too; a gram
@@ -360,9 +359,9 @@ def test_retract_equals_rebuild_in_memory_and_persisted(spark, tmp_path):
     lm.retract_saved(path)
     assert _counts_view(spark, path) == want
     assert M.check_trigram_lm(spark, path)["ok"]
-    assert _read_control_row(f"{path}/meta")["n_retractions"] == 1
+    assert storage.read_control_row(f"{path}/meta")["n_retractions"] == 1
     # max_id did not shrink: retraction never un-allocates ids
-    assert _read_control_row(f"{path}/meta")["max_id"] == docs.agg(
+    assert storage.read_control_row(f"{path}/meta")["max_id"] == docs.agg(
         F.max("doc_id")
     ).first()[0]
 
@@ -406,6 +405,7 @@ def test_retract_refusals(spark, tmp_path):
         lm4.retract_saved(path)
 
 
+@pytest.mark.slow
 def test_retract_saved_replay_and_crash_windows(spark, tmp_path):
     """Every prefix of {negative segment, ledger, meta} converges:
     uncommitted rows are invisible to readers (served counts == the
@@ -457,7 +457,7 @@ def test_retract_saved_replay_and_crash_windows(spark, tmp_path):
     lm.retract_saved(path)
     assert _counts_view(spark, path) == want
     assert M.check_trigram_lm(spark, path)["ok"]
-    m = _read_control_row(f"{path}/meta")
+    m = storage.read_control_row(f"{path}/meta")
     assert m["n_retractions"] == 1
     led = spark.read.parquet(f"{path}/retracted")
     assert led.filter("rseq > 1").count() == 0
@@ -502,7 +502,7 @@ def test_retract_then_update_interleave(spark, tmp_path):
     lm2 = TrigramLM.load(spark, path)
     lm2.update(new)
     lm2.append_saved(path)
-    assert _read_control_row(f"{path}/meta")["n_retractions"] == 1
+    assert storage.read_control_row(f"{path}/meta")["n_retractions"] == 1
 
     want = sorted(
         tuple(r)

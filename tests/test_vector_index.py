@@ -9,10 +9,11 @@ answering external-probe kNN identically to the in-session build.
 
 from __future__ import annotations
 
+import pytest
 from conftest import SF_SMOKE
 from pyspark.sql import functions as F
 
-from lp_etl_plugins_spark import textops as T
+from lp_etl_plugins_spark import storage
 from lp_etl_plugins_spark.vectorops import VectorIndex
 from lp_etl_plugins_spark.inventory import vectorops as IV
 
@@ -167,6 +168,7 @@ def test_append_saved_is_delta_only(spark, tmp_path):
         live.append_saved(path)
 
 
+@pytest.mark.slow
 def test_streamed_ingestion_equals_batch_update(spark, tmp_path):
     """Micro-batch ingestion through foreach_batch_add: two monotone
     delta files drained oldest-first, each absorbed as one
@@ -236,7 +238,6 @@ def test_compact_saved_vector_index_pure_relayout(spark, tmp_path):
     """VectorIndex.compact after streamed appends: every stage
     coalesces to the target file count with row content untouched —
     a re-load serves identical search results and the same max_id."""
-    from lp_etl_plugins_spark.textops import _count_data_files
     from lp_etl_plugins_spark.vectorops import VectorIndex
 
     emb = IV._emb(spark, SF_SMOKE)
@@ -251,7 +252,7 @@ def test_compact_saved_vector_index_pure_relayout(spark, tmp_path):
 
     pre = VectorIndex.load(spark, path)
     want = _rows(pre.search(probes, 3, nprobe=2))
-    files_before = _count_data_files(f"{path}/codes")
+    files_before = storage.count_data_files(f"{path}/codes")
     assert files_before >= 2  # base + appended delta
 
     metrics = VectorIndex.compact(spark, path)
@@ -274,14 +275,13 @@ def test_foreach_batch_add_refuses_unknown_high_water_mark(spark, tmp_path):
     rather than silently duplicate rows on restart."""
     import pytest
 
-    from lp_etl_plugins_spark.textops import _single_partition_df
     from lp_etl_plugins_spark.vectorops import foreach_batch_add
 
     emb = IV._emb(spark, SF_SMOKE)
     path = str(tmp_path / "vindex")
     VectorIndex(emb.filter(F.col("vec_id") % 2 == 0)).save(path)
     # simulate the pre-max_id meta schema
-    _single_partition_df(
+    storage.single_partition_df(
         spark, [("vec_id", "embedding", 4, 64)],
         "id_col string, vec_col string, m int, dims int",
     ).write.mode("overwrite").parquet(f"{path}/meta")
@@ -291,6 +291,7 @@ def test_foreach_batch_add_refuses_unknown_high_water_mark(spark, tmp_path):
         absorb(emb.filter(F.col("vec_id") % 2 == 1), 0)
 
 
+@pytest.mark.slow
 def test_foreach_batch_add_repairs_lost_meta_stamp(spark, tmp_path):
     """Torn-append recovery (r7 ADVICE): append_saved writes
     corpus_lists, then codes, then meta — a crash before the meta
@@ -301,7 +302,6 @@ def test_foreach_batch_add_repairs_lost_meta_stamp(spark, tmp_path):
     re-append); a partially-landed one raises."""
     import pytest
 
-    from lp_etl_plugins_spark.textops import _single_partition_df
     from lp_etl_plugins_spark.vectorops import foreach_batch_add
 
     emb = IV._emb(spark, SF_SMOKE)
@@ -320,7 +320,7 @@ def test_foreach_batch_add_repairs_lost_meta_stamp(spark, tmp_path):
 
     def _stamp_meta(max_id):
         idx = VectorIndex.load(spark, path)
-        _single_partition_df(
+        storage.single_partition_df(
             spark,
             [(idx._id_col, idx._vec_col, idx._m, idx._dims, max_id)],
             VectorIndex._META_SCHEMA,
@@ -572,6 +572,7 @@ def test_retract_saved_load_roundtrip_and_compact_resolves(spark, tmp_path):
     assert check_vector_index(spark, path)["ok"]
 
 
+@pytest.mark.slow
 def test_retract_saved_replay_is_idempotent(spark, tmp_path):
     """The crash contract: a replayed retraction re-appends its ids;
     duplicate tombstone rows change no serving result and the probe
@@ -604,14 +605,13 @@ def test_retract_saved_replay_is_idempotent(spark, tmp_path):
     assert check_vector_index(spark, path)["ok"]
 
 
+@pytest.mark.slow
 def test_compact_crash_windows_converge(spark, tmp_path):
     """Each window of compact()'s write order leaves a serving-correct
     state the probe accepts, and a compact replay finishes the job:
     (a) corpus_lists rewritten, codes not; (b) both rewritten, log not
     cleared."""
     from lp_etl_plugins_spark.maintenance import check_vector_index
-    from lp_etl_plugins_spark.textops import _rewrite_parquet_dir
-
     emb = IV._emb(spark, SF_SMOKE)
     idx = VectorIndex(emb)
     path = str(tmp_path / "vindex")
@@ -625,7 +625,7 @@ def test_compact_crash_windows_converge(spark, tmp_path):
     # window (a): only corpus_lists swapped (simulate the partial
     # compact by performing its first rewrite alone)
     tombs = spark.read.parquet(f"{path}/tombstones").select("id").distinct()
-    _rewrite_parquet_dir(
+    storage.rewrite_parquet_dir(
         spark,
         f"{path}/corpus_lists",
         spark.read.parquet(f"{path}/corpus_lists").join(
@@ -685,7 +685,7 @@ def test_rerank_refine_stage_lifecycle(spark, tmp_path):
     lup.append_saved(p2)
     # a layout saved WITHOUT materialized refine stages stays
     # refine-less through update/append (opt-in contract): no sq8 dir
-    assert not T._parquet_dir_exists(f"{p2}/sq8_codes")
+    assert not storage.parquet_dir_exists(f"{p2}/sq8_codes")
     # re-save WITH the refine stages materialized — the opt-in path
     import shutil
 

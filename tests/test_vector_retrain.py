@@ -33,6 +33,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lp_etl_plugins_spark import maintenance as M
+from lp_etl_plugins_spark import storage
 from lp_etl_plugins_spark import textops as T
 from lp_etl_plugins_spark.vectorops import (
     VectorIndex,
@@ -115,7 +116,7 @@ def _rounded_rows(df, ndigits: int = 6):
 def _stage_snapshot(spark, path: str) -> dict:
     out = {}
     for s in VectorIndex._STAGES + VectorIndex._REFINE_STAGES:
-        if T._parquet_dir_exists(f"{path}/{s}"):
+        if storage.parquet_dir_exists(f"{path}/{s}"):
             out[s] = _rounded_rows(spark.read.parquet(f"{path}/{s}"))
     return out
 
@@ -187,8 +188,8 @@ def test_retrain_rebuild_semantics_hash_gate(spark, tmp_path):
     for s in got:
         assert got[s] == want[s], f"stage {s} diverges from rebuild"
     # meta untouched by retrain: same high-water mark as the rebuild
-    m_got = T._read_control_row(f"{p}/meta")
-    m_want = T._read_control_row(f"{p2}/meta")
+    m_got = storage.read_control_row(f"{p}/meta")
+    m_want = storage.read_control_row(f"{p2}/meta")
     assert m_got["max_id"] == m_want["max_id"]
     assert (m_got["m"], m_got["dims"]) == (m_want["m"], m_want["dims"])
 
@@ -218,6 +219,7 @@ def test_retrain_composes_with_retraction(spark, tmp_path):
     assert res["ok"], res
 
 
+@pytest.mark.slow
 def test_vacuum_retrain_degenerate_opt_in(spark, tmp_path):
     """Default stays report-only; with the corpus supplied the sweep
     retrains under the lease, re-probes, and bills retrained_coarse=1."""
@@ -237,6 +239,7 @@ def test_vacuum_retrain_degenerate_opt_in(spark, tmp_path):
     assert M.check_vector_index(spark, p)["ok"]
 
 
+@pytest.mark.slow
 def test_vacuum_retrain_ineffective_on_point_mass(spark, tmp_path):
     """A genuinely collapsed corpus re-probes degenerate after the
     retrain — reported, never billed as healthy (the round-9 principle
@@ -270,6 +273,7 @@ def test_vacuum_retrain_ineffective_on_point_mass(spark, tmp_path):
         M.vacuum(spark, [p, p2], retrain_degenerate=corpus).collect()
 
 
+@pytest.mark.slow
 def test_retrain_kill_points_converge(spark, tmp_path):
     """Chaos over the retrain write sequence at driver-write
     granularity (the test_chaos_crash interceptor): a kill before the
@@ -306,7 +310,7 @@ def test_retrain_kill_points_converge(spark, tmp_path):
                 VectorIndex.retrain_coarse(
                     spark, case, corpus, n_iter=1, n_lists=10
                 )
-        if not T._parquet_dir_exists(marker):
+        if not storage.parquet_dir_exists(marker):
             # pre-commit: the live index is untouched and still loads
             assert _stage_snapshot(spark, case) == pre_snap
             VectorIndex.load(spark, case)
@@ -323,7 +327,7 @@ def test_retrain_kill_points_converge(spark, tmp_path):
             with pytest.raises(T.TornStateError):
                 VectorIndex.load(spark, case)
             assert VectorIndex.repair_torn_retrain(spark, case)
-        assert not T._parquet_dir_exists(marker)
+        assert not storage.parquet_dir_exists(marker)
         assert _stage_snapshot(spark, case) == want, f"kill={kill}"
         assert M.check_vector_index(spark, case)["ok"]
 
@@ -370,7 +374,7 @@ def test_mid_swap_rename_windows_roll_forward(spark, tmp_path):
         # round-11 serving layout (bucket attach + sort) is skipped
         frame = getattr(idx, s)
         frame.write.mode("overwrite").parquet(f"{case}/{s}.__retrain__")
-    T._write_control_parquet(
+    storage.write_control_parquet(
         f"{case}/{VectorIndex._RETRAIN_MARKER}", [(10, 1)], "n_lists int, n_iter int"
     )
 
@@ -413,13 +417,13 @@ def test_suppression_skipped_when_meta_has_no_high_water(spark, tmp_path):
     row = M.vacuum(spark, [p], retrain_degenerate=corpus).collect()[0]
     assert "retrain_ineffective=1" in row["violations"]
     # rewrite meta and marker to the legacy (no high-water) shape
-    m = T._read_control_row(f"{p}/meta")
-    T._write_control_parquet(
+    m = storage.read_control_row(f"{p}/meta")
+    storage.write_control_parquet(
         f"{p}/meta",
         [(m["id_col"], m["vec_col"], int(m["m"]), int(m["dims"]), None)],
         VectorIndex._META_SCHEMA,
     )
-    T._write_control_parquet(
+    storage.write_control_parquet(
         f"{p}/{VectorIndex._RETRAIN_SUPPRESS}", [(None,)], "max_id bigint"
     )
     row2 = M.vacuum(spark, [p], retrain_degenerate=corpus).collect()[0]
@@ -438,11 +442,11 @@ def test_compact_resolving_tombstones_clears_retrain_backoff(spark, tmp_path):
     _save(corpus, p)
     M.vacuum(spark, [p], retrain_degenerate=corpus).collect()
     marker = f"{p}/{VectorIndex._RETRAIN_SUPPRESS}"
-    assert T._parquet_dir_exists(marker)
+    assert storage.parquet_dir_exists(marker)
 
     # a pure re-layout compact keeps the marker (geometry unchanged)
     VectorIndex.compact(spark, p)
-    assert T._parquet_dir_exists(marker)
+    assert storage.parquet_dir_exists(marker)
 
     # a tombstone-resolving compact clears it
     idx = VectorIndex.load(spark, p)
@@ -450,4 +454,4 @@ def test_compact_resolving_tombstones_clears_retrain_backoff(spark, tmp_path):
     idx.retract(dead)
     idx.retract_saved(p)
     VectorIndex.compact(spark, p)
-    assert not T._parquet_dir_exists(marker)
+    assert not storage.parquet_dir_exists(marker)
