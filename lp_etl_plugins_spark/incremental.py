@@ -141,6 +141,22 @@ _MANIFEST_SCHEMA = (
 )
 
 
+def _null_ids(col: str):
+    """Aggregate: rows whose ``col`` is null."""
+    return F.count(F.lit(1)) - F.count(col)
+
+
+def _refuse_null_ids(who: str, nulls) -> None:
+    """The non-null ``doc_id`` entry contract: exact dedup's ``min_by``
+    skips null orderings (keep-first equals the old window only under
+    non-null ids), and every id stamp, ledger and anti-join keys on it."""
+    if nulls:
+        raise ValueError(
+            f"{who}: {int(nulls)} document(s) with a null doc_id — every "
+            "document needs a non-null unique doc_id"
+        )
+
+
 def _df_cap(max_df: int, max_df_frac: float, n: int) -> int:
     """The posting-list cap of textops._pruned_gram_candidates as a
     plain int — min(max_df, max(2, ceil(frac*n))). Computed on the
@@ -788,8 +804,9 @@ class CurationState:
         - ``grams`` drops tombstoned docs' postings (dead rows that
           every decontamination read filters out again);
         - ``indexed``/``hashes``/``contam`` and every index substrate
-          are re-partitioned to ``ceil(rows / target_rows_per_file)``
-          files (pure re-layout — these have no dead rows);
+          are re-laid-out into files of at most
+          ``target_rows_per_file`` rows (pure re-layout — these have no
+          dead rows);
         - ``meta.n_compactions`` bumps, so readers can tell a
           compacted lineage from the update count alone.
 
@@ -887,7 +904,7 @@ class CurationState:
             .groupBy(F.md5("text").alias("h"))
             .agg(F.min("doc_id").alias("src_id"))
             if has_led
-            else spark.read.parquet(f"{p}/hashes")
+            else storage.read_parquet_pinned(spark, f"{p}/hashes")
         )
         out["hashes"] = storage.rewrite_parquet_dir(
             spark, f"{p}/hashes", hashes_frame, target_rows_per_file
@@ -1010,18 +1027,18 @@ class CurationState:
         st = cls(spark, path, meta)
         from concurrent.futures import ThreadPoolExecutor
 
-        indexed = cls._exact_dedup(st._filtered(docs))
+        # one pass over ``docs`` before anything is written: the id
+        # high-water mark (unless the caller passed it) and the
+        # non-null doc_id entry contract
+        row = docs.agg(
+            F.max("doc_id").alias("hi"), _null_ids("doc_id").alias("nulls")
+        ).first()
+        _refuse_null_ids("CurationState.build", row["nulls"])
         if max_doc_id is None:
-            # the high-water agg and the indexed write are independent
-            # full passes over ``docs`` — overlap them (guide §2.6)
-            with ThreadPoolExecutor(max_workers=1) as pool:
-                f_max = pool.submit(
-                    lambda: docs.agg(F.max("doc_id")).first()[0]
-                )
-                indexed.write.mode("overwrite").parquet(f"{path}/indexed")
-                max_doc_id = f_max.result()
-        else:
-            indexed.write.mode("overwrite").parquet(f"{path}/indexed")
+            max_doc_id = row["hi"]
+        cls._exact_dedup(st._filtered(docs)).write.mode("overwrite").parquet(
+            f"{path}/indexed"
+        )
         indexed = storage.read_parquet_pinned(spark, f"{path}/indexed")
         idx = T.DedupIndex(
             indexed,
@@ -1156,8 +1173,8 @@ class CurationState:
         row per map partition before the exchange, and no per-group
         sort runs after it — where the window shuffled and sorted
         every row to discard all but one per group. Row-set identical:
-        doc_id is unique, so min_by's winner is exactly the window's
-        rn=1 row."""
+        doc_id is non-null (refused at entry) and unique, so min_by's
+        winner is exactly the window's rn=1 row."""
         cols = d.columns
         return (
             d.groupBy(F.md5("text").alias("__h"))
@@ -1289,7 +1306,9 @@ class CurationState:
             F.min("doc_id").alias("lo"),
             F.max("doc_id").alias("hi"),
             F.count(F.lit(1)).alias("n"),
+            _null_ids("doc_id").alias("nulls"),
         ).first()
+        _refuse_null_ids("CurationState.update", bounds["nulls"])
         if bounds["lo"] is None:
             # same key set as the non-empty path: contam_pairs reports
             # the CURRENT pair count (nothing changed), not a bogus 0

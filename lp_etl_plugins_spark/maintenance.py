@@ -81,6 +81,17 @@ def _bad(v: dict, name: str, n: int) -> None:
         v[name] = int(n)
 
 
+def _schema_probe(v: dict, path: str, stages) -> None:
+    """``mixed_schema_<stage>`` = the number of distinct file schemas of
+    a stage directory holding more than one. Reads pin the FIRST
+    file's schema, so a mixed directory silently drops or misreads the
+    other files' columns; the footer pass sees every file's schema."""
+    for stage in stages:
+        st = storage.footer_stats(f"{path}/{stage}")
+        if st is not None and st.mixed:
+            _bad(v, f"mixed_schema_{stage}", len(st.schemas))
+
+
 def check_dedup_index(spark: SparkSession, path: str) -> dict:
     """Integrity probe over a saved :class:`textops.DedupIndex`
     WITHOUT its corpus: verified ⊆ pairs, pair endpoints ⊆ banded
@@ -94,6 +105,7 @@ def check_dedup_index(spark: SparkSession, path: str) -> dict:
     physical resolution; uncommitted ledger rows are themselves
     reported (the torn-retraction signal)."""
     v: dict[str, int] = {}
+    _schema_probe(v, path, T.DedupIndex._STAGES + ("retracted",))
     has = {
         s: storage.parquet_dir_exists(f"{path}/{s}") for s in T.DedupIndex._STAGES
     }
@@ -104,7 +116,7 @@ def check_dedup_index(spark: SparkSession, path: str) -> dict:
             n_retr = int(
                 storage.read_control_row(f"{path}/meta").get("n_retractions") or 0
             )
-        led = spark.read.parquet(f"{path}/retracted")
+        led = storage.read_parquet_pinned(spark, f"{path}/retracted")
         _bad(
             v,
             "uncommitted_ledger_rows",
@@ -124,7 +136,9 @@ def check_dedup_index(spark: SparkSession, path: str) -> dict:
         return df
 
     pairs = (
-        _live(spark.read.parquet(f"{path}/pairs"), "id_a", "id_b")
+        _live(
+            storage.read_parquet_pinned(spark, f"{path}/pairs"), "id_a", "id_b"
+        )
         if has["pairs"]
         else None
     )
@@ -134,7 +148,9 @@ def check_dedup_index(spark: SparkSession, path: str) -> dict:
         # whether verified_clusters made it to disk
         _bad(v, "stage_missing_verified", 1)
     if has["verified"] and pairs is not None:
-        verified = _live(spark.read.parquet(f"{path}/verified"), "id_a", "id_b")
+        verified = _live(
+            storage.read_parquet_pinned(spark, f"{path}/verified"), "id_a", "id_b"
+        )
         _bad(
             v,
             "verified_not_in_pairs",
@@ -143,9 +159,9 @@ def check_dedup_index(spark: SparkSession, path: str) -> dict:
             .count(),
         )
     if has["bands"] and pairs is not None:
-        b_ids = _live(spark.read.parquet(f"{path}/bands"), "id").select(
-            F.col("id").alias("id_a")
-        )
+        b_ids = _live(
+            storage.read_parquet_pinned(spark, f"{path}/bands"), "id"
+        ).select(F.col("id").alias("id_a"))
         ends = pairs.select("id_a").unionByName(
             pairs.select(F.col("id_b").alias("id_a"))
         )
@@ -155,9 +171,11 @@ def check_dedup_index(spark: SparkSession, path: str) -> dict:
             _bad(v, "stage_missing_verified", 1)
         else:
             verified = _live(
-                spark.read.parquet(f"{path}/verified"), "id_a", "id_b"
+                storage.read_parquet_pinned(spark, f"{path}/verified"), "id_a", "id_b"
             )
-            vc_ids = spark.read.parquet(f"{path}/verified_clusters").select("id")
+            vc_ids = storage.read_parquet_pinned(
+                spark, f"{path}/verified_clusters"
+            ).select("id")
             v_ids = verified.select(F.col("id_a").alias("id")).unionByName(
                 verified.select(F.col("id_b").alias("id"))
             )
@@ -212,50 +230,69 @@ def check_vector_index(
         _bad(v, f"stage_missing_{s}", 1)
     if missing:
         return {"ok": False, "violations": v}
+    _schema_probe(
+        v, path, VectorIndex._STAGES + VectorIndex._REFINE_STAGES + ("tombstones",)
+    )
     m = storage.read_control_row(f"{path}/meta")
-    lists = spark.read.parquet(f"{path}/corpus_lists")
-    codes = spark.read.parquet(f"{path}/codes")
-    tombs = None
-    if storage.parquet_dir_exists(f"{path}/tombstones"):
-        t = spark.read.parquet(f"{path}/tombstones").select("id").distinct()
-        if t.first() is not None:
-            tombs = t
-    live_lists, live_codes = lists, codes
-    if tombs is not None:
-        live_lists = lists.join(F.broadcast(tombs), "id", "left_anti")
-        live_codes = codes.join(
-            F.broadcast(tombs.withColumnRenamed("id", "neighbor_id")),
-            "neighbor_id",
-            "left_anti",
-        )
-    _bad(
-        v,
-        "duplicate_corpus_ids",
-        lists.groupBy("id").count().filter(F.col("count") > 1).count(),
-    )
-    row = lists.agg(
-        F.count(F.lit(1)).alias("n"), F.max("id").alias("hi")
-    ).first()
-    n_live = live_lists.count() if tombs is not None else int(row["n"])
-    n_codes = live_codes.count()
-    _bad(v, "code_row_drift", abs(n_codes - n_live * int(m["m"])))
-    _bad(
-        v,
-        "code_orphans",
-        live_codes.select(F.col("neighbor_id").alias("id"))
-        .join(live_lists.select("id"), "id", "left_anti")
-        .count(),
-    )
-    hi, stamp = row["hi"], m.get("max_id")
+    lists = storage.read_parquet_pinned(spark, f"{path}/corpus_lists")
+    codes = storage.read_parquet_pinned(spark, f"{path}/codes")
+    # every invariant from ONE pass: lists, codes and tombstone rows
+    # keyed by id, folded per id and then per coarse list. A null id
+    # never matches a tombstone or a list row (the anti-join semantics
+    # of the live view), so it is always live and its codes orphaned.
+    null_id = F.col("id").isNull()
+    no_bucket = F.lit(None).cast(lists.schema["bucket"].dataType).alias("bucket")
+    rows = lists.select(
+        "id", "bucket", F.lit(1).alias("l"), F.lit(0).alias("k"),
+        F.lit(0).alias("t"),
+    ).unionByName(codes.select(
+        F.col("neighbor_id").alias("id"), no_bucket,
+        F.lit(0).alias("l"), F.lit(1).alias("k"), F.lit(0).alias("t"),
+    ))
+    tomb_dir = f"{path}/tombstones"
+    if storage.parquet_dir_exists(tomb_dir):
+        st = storage.footer_stats(tomb_dir)
+        if st is None or st.rows:
+            tombs = storage.read_parquet_pinned(spark, tomb_dir)
+            rows = rows.unionByName(tombs.select(
+                "id", no_bucket,
+                F.lit(0).alias("l"), F.lit(0).alias("k"), F.lit(1).alias("t"),
+            ))
+    per_id = rows.groupBy("id").agg(
+        F.sum("l").alias("nl"), F.sum("k").alias("nc"),
+        F.max("t").alias("dead"), F.min("bucket").alias("b"),
+    ).withColumn("live", (F.col("dead") == 0) | null_id)
+    per_list = per_id.groupBy("b").agg(
+        F.sum("nl").alias("n"),
+        F.sum((F.col("nl") > 1).cast("bigint")).alias("dup"),
+        F.sum(F.when(F.col("live"), F.col("nl"))).alias("n_live"),
+        F.sum(F.when(F.col("live"), F.col("nc"))).alias("n_codes"),
+        F.sum(
+            F.when(F.col("live") & ((F.col("nl") == 0) | null_id), F.col("nc"))
+        ).alias("orphans"),
+        F.max(F.when(F.col("nl") > 0, F.col("id"))).alias("hi"),
+    ).collect()
+    total = {
+        c: sum(int(r[c] or 0) for r in per_list)
+        for c in ("n", "dup", "n_live", "n_codes", "orphans")
+    }
+    his = [r["hi"] for r in per_list if r["hi"] is not None]
+    hi = max(his) if his else None
+    _bad(v, "duplicate_corpus_ids", total["dup"])
+    _bad(v, "code_row_drift", abs(total["n_codes"] - total["n_live"] * int(m["m"])))
+    _bad(v, "code_orphans", total["orphans"])
+    stamp = m.get("max_id")
     if hi is not None and stamp is not None and int(hi) > int(stamp):
         _bad(v, "rows_beyond_max_id_stamp", 1)
-    bal = lists.groupBy("bucket").count().agg(
-        F.max("count").alias("mx"), F.count(F.lit(1)).alias("nl")
-    ).first()
-    if (
-        int(row["n"]) > 1
-        and int(bal["mx"] or 0) > degenerate_list_frac * int(row["n"])
-    ):
+    if total["dup"]:
+        # a duplicated id may sit in two lists: count raw rows per list
+        sizes = [
+            r[0] for r in lists.groupBy("bucket").count().select("count").collect()
+        ]
+    else:
+        sizes = [int(r["n"] or 0) for r in per_list]
+    mx = max(sizes, default=0)
+    if total["n"] > 1 and mx > degenerate_list_frac * total["n"]:
         # round 10: no `nl > 1` guard — a multi-vector corpus collapsed
         # into ONE surviving list is the degenerate condition at its
         # worst (nprobe cannot prune at all), and it is exactly the
@@ -282,9 +319,10 @@ def check_repeat_index(spark: SparkSession, path: str) -> dict:
         _bad(v, f"stage_missing_{s}", 1)
     if missing:
         return {"ok": False, "violations": v}
+    _schema_probe(v, path, ("postings", "spans", "retracted", "gram_counts"))
     m = storage.read_control_row(f"{path}/meta")
-    postings = spark.read.parquet(f"{path}/postings")
-    spans = spark.read.parquet(f"{path}/spans")
+    postings = storage.read_parquet_pinned(spark, f"{path}/postings")
+    spans = storage.read_parquet_pinned(spark, f"{path}/spans")
     hi = int(m["max_doc_id"])
     _bad(v, "postings_beyond_max_doc", postings.filter(F.col("id") > hi).count())
     _bad(v, "spans_beyond_max_doc", spans.filter(F.col("id") > hi).count())
@@ -302,7 +340,7 @@ def check_repeat_index(spark: SparkSession, path: str) -> dict:
     )
     if storage.parquet_dir_exists(f"{path}/retracted"):
         n_retr = int(m.get("n_retractions") or 0)
-        led = spark.read.parquet(f"{path}/retracted")
+        led = storage.read_parquet_pinned(spark, f"{path}/retracted")
         _bad(
             v,
             "uncommitted_ledger_rows",
@@ -324,7 +362,7 @@ def check_repeat_index(spark: SparkSession, path: str) -> dict:
         # exactly what the substrate exists to avoid — so staleness is
         # guarded by compact's invalidate/validate meta protocol, not
         # the nightly probe
-        gc = spark.read.parquet(f"{path}/gram_counts")
+        gc = storage.read_parquet_pinned(spark, f"{path}/gram_counts")
         row = gc.agg(
             F.count(F.lit(1)).alias("n"),
             F.countDistinct("g").alias("d"),
@@ -359,17 +397,18 @@ def check_media_index(spark: SparkSession, path: str) -> dict:
         _bad(v, f"stage_missing_{s}", 1)
     if missing:
         return {"ok": False, "violations": v}
+    _schema_probe(v, path, MediaIndex._STAGES + ("retracted",))
     m = storage.read_control_row(f"{path}/meta")
-    ph = spark.read.parquet(f"{path}/phash")
-    pairs = spark.read.parquet(f"{path}/pairs")
-    clusters = spark.read.parquet(f"{path}/clusters")
+    ph = storage.read_parquet_pinned(spark, f"{path}/phash")
+    pairs = storage.read_parquet_pinned(spark, f"{path}/pairs")
+    clusters = storage.read_parquet_pinned(spark, f"{path}/clusters")
     if storage.parquet_dir_exists(f"{path}/retracted"):
         # cross-stage checks run over the LIVE view (rows minus
         # committed tombstones) — consistent before, during, and after
         # compact()'s physical resolution; uncommitted ledger rows are
         # the torn-retraction signal
         n_retr = int(m.get("n_retractions") or 0)
-        led = spark.read.parquet(f"{path}/retracted")
+        led = storage.read_parquet_pinned(spark, f"{path}/retracted")
         _bad(
             v,
             "uncommitted_ledger_rows",
@@ -441,19 +480,25 @@ def check_trigram_lm(spark: SparkSession, path: str) -> dict:
         return {"ok": False, "violations": v}
     from .textops import TrigramLM
 
+    _schema_probe(v, path, ("counts", "retracted"))
     counts = TrigramLM._raw_counts(spark, path)
     stamp, n_retr = None, 0
     if storage.parquet_dir_exists(f"{path}/meta"):
         m = storage.read_control_row(f"{path}/meta")
         stamp = m.get("max_id")
         n_retr = int(m.get("n_retractions") or 0)
-    row = counts.agg(
+    committed = (
+        F.lit(True) if stamp is None else TrigramLM._committed_src(stamp, n_retr)
+    )
+    # every count-log invariant from one grouping by gram: the per-gram
+    # row count against its distinct segments (duplicate rows; a
+    # pre-segmented model's all-null src needs a sentinel below any
+    # real retraction sequence), the sign discipline, the stamps, and
+    # the merged committed count
+    per_g = counts.groupBy("g").agg(
         F.count(F.lit(1)).alias("n"),
-        # count(DISTINCT a, b) drops rows with ANY null column — a
-        # pre-segmented model's all-null src needs a sentinel (below
-        # any real retraction sequence)
-        F.count_distinct(
-            "g", F.coalesce("src", F.lit(-(1 << 62))).alias("src")
+        F.size(
+            F.collect_set(F.coalesce("src", F.lit(-(1 << 62))))
         ).alias("d"),
         F.sum(
             (
@@ -463,46 +508,54 @@ def check_trigram_lm(spark: SparkSession, path: str) -> dict:
         F.sum(
             ((F.col("src") < 0) & (F.col("c") >= 0)).cast("bigint")
         ).alias("bad_neg"),
-        F.sum(F.col("g").isNull().cast("bigint")).alias("null_g"),
         F.sum(
             (
                 (F.col("src") > F.lit(stamp).cast("bigint"))
                 | (F.col("src") < F.lit(-n_retr).cast("bigint"))
             ).cast("bigint")
         ).alias("unstamped"),
+        F.sum(F.when(committed, F.col("c"))).alias("merged"),
+    )
+    row = per_g.agg(
+        F.sum("n").alias("n"),
+        # count(DISTINCT g, src) skips null grams
+        F.sum(F.when(F.col("g").isNotNull(), F.col("d"))).alias("d"),
+        F.sum("bad_pos").alias("bad_pos"),
+        F.sum("bad_neg").alias("bad_neg"),
+        F.sum(F.when(F.col("g").isNull(), F.col("n"))).alias("null_g"),
+        F.sum("unstamped").alias("unstamped"),
+        F.sum((F.col("merged") < 0).cast("bigint")).alias("neg_merged"),
     ).first()
-    if int(row["n"]) == 0:
+    n = int(row["n"] or 0)
+    if n == 0:
         _bad(v, "empty_vocabulary", 1)
     _bad(v, "nonpositive_counts", int(row["bad_pos"] or 0))
     _bad(v, "nonnegative_retraction_counts", int(row["bad_neg"] or 0))
     _bad(v, "null_grams", int(row["null_g"] or 0))
-    _bad(v, "duplicate_gram_rows", int(row["n"]) - int(row["d"]))
+    _bad(v, "duplicate_gram_rows", n - int(row["d"] or 0))
     if stamp is not None:
         _bad(v, "uncommitted_segment_rows", int(row["unstamped"] or 0))
         if n_retr or storage.parquet_dir_exists(f"{path}/retracted"):
-            merged = TrigramLM._committed(counts, stamp, n_retr).groupBy(
-                "g"
-            ).agg(F.sum("c").alias("c"))
-            _bad(
-                v,
-                "negative_merged_counts",
-                merged.filter(F.col("c") < 0).count(),
+            _bad(v, "negative_merged_counts", int(row["neg_merged"] or 0))
+    led_path = f"{path}/retracted"
+    if storage.parquet_dir_exists(led_path):
+        # the footers prove both ledger probes zero in a healthy state;
+        # count exactly only when they cannot
+        b = storage.footer_stats(led_path, ["rseq", "id"])
+        if b is None or (b.hi["rseq"] is not None and b.hi["rseq"] > n_retr) or (
+            stamp is not None and b.hi["id"] is not None and b.hi["id"] > int(stamp)
+        ):
+            led = storage.read_parquet_pinned(spark, led_path)
+            beyond = (F.col("rseq") <= n_retr) & (
+                F.col("id") > F.lit(stamp).cast("bigint")
             )
-    if storage.parquet_dir_exists(f"{path}/retracted"):
-        led = spark.read.parquet(f"{path}/retracted")
-        _bad(
-            v,
-            "uncommitted_ledger_rows",
-            led.filter(F.col("rseq") > n_retr).count(),
-        )
-        if stamp is not None:
-            _bad(
-                v,
-                "retracted_id_beyond_stamp",
-                led.filter(
-                    (F.col("rseq") <= n_retr) & (F.col("id") > int(stamp))
-                ).count(),
-            )
+            lr = led.agg(
+                F.sum((F.col("rseq") > n_retr).cast("bigint")).alias("unc"),
+                F.sum(beyond.cast("bigint")).alias("beyond"),
+            ).first()
+            _bad(v, "uncommitted_ledger_rows", int(lr["unc"] or 0))
+            if stamp is not None:
+                _bad(v, "retracted_id_beyond_stamp", int(lr["beyond"] or 0))
     return {"ok": not v, "violations": v}
 
 
@@ -557,7 +610,7 @@ def _purge_torn_retraction(
         return False
     m = storage.read_control_row(f"{path}/meta")
     n_r = int(m.get("n_retractions") or 0)
-    led = spark.read.parquet(led_path)
+    led = storage.read_parquet_pinned(spark, led_path)
     if not led.filter(F.col("rseq") > n_r).limit(1).count():
         return False
     # ORDER: repair every derived write the torn attempt may have
@@ -589,7 +642,7 @@ def _purge_torn_retraction(
         storage.rewrite_parquet_dir(
             spark,
             f"{path}/spans",
-            spark.read.parquet(f"{path}/spans").filter(
+            storage.read_parquet_pinned(spark, f"{path}/spans").filter(
                 F.col("gen") <= n_u
             ),
             1 << 20,
@@ -661,7 +714,7 @@ def _complete_torn_pipeline_retraction(spark: SparkSession, path: str) -> bool:
     st = CurationState.load(spark, path)
     n_r = int(st.meta.get("n_retractions") or 0)
     unc = (
-        spark.read.parquet(led_path)
+        storage.read_parquet_pinned(spark, led_path)
         .filter(F.col("rseq") > n_r)
         .select("doc_id")
         .distinct()
@@ -743,9 +796,10 @@ def _tombstone_pressure(
     fast path: absence means the read plans carry no anti-join at
     all, so there is nothing to compact away)."""
     led, prim = _TOMBSTONE_LEDGER[family]
-    if not storage.parquet_dir_exists(f"{path}/{led}"):
+    led_path = f"{path}/{led}"
+    if not storage.parquet_dir_exists(led_path):
         return None
-    led_df = spark.read.parquet(f"{path}/{led}")
+    resolved = None
     if family != "VectorIndex":
         # these families RETAIN the ledger after compaction (it is
         # their replay-refusal / audit record); rows at or below the
@@ -766,13 +820,25 @@ def _tombstone_pressure(
         n_committed = int(
             storage.read_control_row(f"{path}/meta").get("n_retractions") or 0
         )
-        led_df = led_df.filter(F.col("rseq") > min(resolved, n_committed))
-    n_led = led_df.count()
+        resolved = min(resolved, n_committed)
+    # footers: the ledger's row count, and proof that no row lies
+    # above the resolution stamp; a Spark count only when they cannot
+    st = storage.footer_stats(led_path, [] if resolved is None else ["rseq"])
+    if st is None or (resolved is not None and (st.hi["rseq"] or 0) > resolved):
+        led_df = storage.read_parquet_pinned(spark, led_path)
+        if resolved is not None:
+            led_df = led_df.filter(F.col("rseq") > resolved)
+        n_led = led_df.count()
+    else:
+        n_led = st.rows if resolved is None else 0
     if not n_led:
         return None
     if not storage.parquet_dir_exists(f"{path}/{prim}"):
         return None
-    n_prim = spark.read.parquet(f"{path}/{prim}").count()
+    prim_path = f"{path}/{prim}"
+    n_prim = storage.dir_stats(
+        prim_path, storage.read_parquet_pinned(spark, prim_path)
+    ).rows
     return n_led / max(n_prim, 1)
 
 
@@ -1152,4 +1218,4 @@ def vacuum(
             (path, family, bool(res["ok"]), viol, worst, compacted,
              worst_after, recovered)
         )
-    return storage.single_partition_df(spark, rows, _REPORT_SCHEMA)
+    return storage.control_frame(spark, rows, _REPORT_SCHEMA)

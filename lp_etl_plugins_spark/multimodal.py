@@ -1773,7 +1773,7 @@ class MediaIndex:
             self.n_retractions = int(m.get("n_retractions") or 0)
             spark = self._delta["phash"].sparkSession
             if (
-                spark.read.parquet(f"{path}/retracted")
+                storage.read_parquet_pinned(spark, f"{path}/retracted")
                 .filter(F.col("rseq") > self.n_retractions)
                 .limit(1)
                 .count()
@@ -1911,7 +1911,7 @@ class MediaIndex:
                     storage.read_control_row(f"{path}/meta").get("n_retractions")
                     or 0
                 )
-                led = spark.read.parquet(led_path)
+                led = storage.read_parquet_pinned(spark, led_path)
                 if led.filter(F.col("rseq") > n_r).limit(1).count():
                     raise TornStateError(
                         "MediaIndex.compact: uncommitted retraction ledger "
@@ -1923,7 +1923,7 @@ class MediaIndex:
                     tombs = t.localCheckpoint()
             out = {}
             for stage in cls._STAGES:
-                df = spark.read.parquet(f"{path}/{stage}")
+                df = storage.read_parquet_pinned(spark, f"{path}/{stage}")
                 cols = df.columns
                 if tombs is not None and stage == "phash":
                     df = df.join(
@@ -1948,7 +1948,7 @@ class MediaIndex:
                 out["retracted"] = storage.rewrite_parquet_dir(
                     spark,
                     led_path,
-                    spark.read.parquet(led_path),
+                    storage.read_parquet_pinned(spark, led_path),
                     target_rows_per_file,
                 )
                 storage.stamp_resolved_retractions(path, n_r)

@@ -17,6 +17,32 @@ and stripped (:func:`local_path`). An object-store deployment fronts
 the same directories with a transactional table format, whose commit
 is a metadata write and whose swap is a metadata commit.
 
+Footer-derived control plane
+----------------------------
+At index scale a lifecycle op costs its number of Spark jobs times the
+per-job floor, so the questions the lifecycle asks ABOUT a directory
+(how many rows, the high-water mark, any row beyond a commit stamp,
+one schema or several) are answered from the parquet footers the
+driver reads directly (:func:`footer_stats`), not by a Spark job:
+
+- ``num_rows`` is always trusted: every writer records it.
+- Column min/max are trusted only for integer columns (INT32/INT64,
+  signed or unannotated), whose statistics parquet-mr (Spark) and
+  Arrow write as the exact extremes. A row group whose statistics are
+  absent (e.g. a file written with statistics off), a file missing the
+  column, or any other column type makes :func:`footer_stats` return
+  None; the caller then asks Spark (:func:`scan_stats`, the same
+  answer from one aggregate). A row group of nulls only has no
+  min/max and contributes nothing, as in Spark's ``min``/``max``.
+- Only local paths are read (the driver-local contract above); any
+  other scheme returns None and takes the Spark fallback.
+
+Probes that look for a violation use the footers as proof of absence
+(e.g. ``max(src) <= stamp`` proves no unstamped row) and pay for an
+exact Spark count only when the footers cannot prove it. A footer value
+that disagreed with Spark would be a bug, never a tolerance: the
+lifecycle tests compare both on every family step.
+
 At-least-once absorb contract
 -----------------------------
 Each family exposes ``foreach_batch_*`` factories returning a
@@ -50,7 +76,8 @@ import math
 import os
 import shutil
 import uuid
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
@@ -97,6 +124,13 @@ def _arrow_table(rows: list, schema: str):
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
+
+
+def control_frame(spark, rows: list, schema: str) -> DataFrame:
+    """A small driver-built frame (a report, a set of ids) backed by an
+    Arrow table: it plans as a local relation, so collecting it runs no
+    Spark job (:func:`single_partition_df` costs one)."""
+    return spark.createDataFrame(_arrow_table(rows, schema))
 
 
 def _data_files(path: str) -> Iterator[str]:
@@ -232,6 +266,120 @@ def count_data_files(path: str) -> int:
     return sum(1 for _ in _data_files(path))
 
 
+@dataclass(frozen=True)
+class DirStats:
+    """What the control plane asks of a parquet directory: its row
+    count, per-column min/max (None for a column with no non-null
+    value) and the distinct per-file schemas seen, each a sorted tuple
+    of ``(column, type)`` (empty when the answer came from Spark)."""
+
+    rows: int
+    lo: dict
+    hi: dict
+    schemas: tuple = ()
+
+    @property
+    def mixed(self) -> bool:
+        return len(self.schemas) > 1
+
+
+# physical/converted types whose footer min/max are exact (module docstring)
+_EXACT_PHYSICAL = ("INT32", "INT64")
+_EXACT_CONVERTED = ("NONE", "INT_8", "INT_16", "INT_32", "INT_64")
+
+
+def _is_local(path: str) -> bool:
+    return path.startswith("file:") or "://" not in path
+
+
+def _footer_stats(files: Sequence[str], cols: Sequence[str]) -> DirStats | None:
+    import pyarrow.parquet as pq
+
+    rows = 0
+    lo: dict = dict.fromkeys(cols)
+    hi: dict = dict.fromkeys(cols)
+    shapes: dict = {}
+    for f in files:
+        md = pq.read_metadata(f)
+        shape = tuple(sorted(
+            (fl.name, str(fl.type)) for fl in md.schema.to_arrow_schema()
+        ))
+        shapes.setdefault(shape, None)
+        index = {md.schema.column(i).path: i for i in range(md.num_columns)}
+        for c in cols:
+            i = index.get(c)
+            if (
+                i is None
+                or md.schema.column(i).physical_type not in _EXACT_PHYSICAL
+                or md.schema.column(i).converted_type not in _EXACT_CONVERTED
+            ):
+                return None
+        for r in range(md.num_row_groups):
+            rg = md.row_group(r)
+            if rg.num_rows == 0:
+                continue
+            for c in cols:
+                st = rg.column(index[c]).statistics
+                if st is None:
+                    return None
+                if not st.has_min_max:
+                    if st.has_null_count and st.null_count == rg.num_rows:
+                        continue  # all-null row group: no extremes
+                    return None
+                lo[c] = st.min if lo[c] is None else min(lo[c], st.min)
+                hi[c] = st.max if hi[c] is None else max(hi[c], st.max)
+        rows += md.num_rows
+    return DirStats(rows, lo, hi, tuple(shapes))
+
+
+def footer_stats(path: str, cols: Sequence[str] = ()) -> DirStats | None:
+    """Row count, min/max of the integer columns ``cols`` and the
+    per-file schemas of a parquet directory, from one driver-side
+    footer read per data file — no Spark job. None when the directory
+    is absent or not local, or when some row group's statistics cannot
+    answer for ``cols`` (module docstring: when statistics are
+    trusted); the caller then falls back to :func:`scan_stats`."""
+    if not _is_local(path) or not os.path.isdir(local_path(path)):
+        return None
+    return _footer_stats(list(_data_files(path)), cols)
+
+
+def scan_stats(frame: DataFrame, cols: Sequence[str] = ()) -> DirStats:
+    """The Spark twin of :func:`footer_stats`: one aggregate over
+    ``frame`` (the directory read) for its row count and the min/max
+    of ``cols``."""
+    row = frame.agg(
+        F.count(F.lit(1)).alias("__n"),
+        *[F.min(c).alias(f"__lo_{c}") for c in cols],
+        *[F.max(c).alias(f"__hi_{c}") for c in cols],
+    ).first()
+    return DirStats(
+        int(row["__n"]),
+        {c: row[f"__lo_{c}"] for c in cols},
+        {c: row[f"__hi_{c}"] for c in cols},
+    )
+
+
+def dir_stats(path: str, frame: DataFrame, cols: Sequence[str] = ()) -> DirStats:
+    """:func:`footer_stats` of ``path``, or :func:`scan_stats` of
+    ``frame`` (its read) when the footers cannot answer."""
+    return footer_stats(path, cols) or scan_stats(frame, cols)
+
+
+def append_parquet(frame: DataFrame, path: str, cols: Sequence[str] = ()) -> DirStats:
+    """Spark append of ``frame`` to the parquet directory ``path``;
+    returns :func:`footer_stats` of exactly the files this append
+    landed (the files absent before it), or :func:`scan_stats` of
+    ``frame`` when their footers cannot answer — so a writer learns
+    the rows and high-water mark it just landed without a second job."""
+    before = set(_data_files(path))
+    frame.write.mode("append").parquet(path)
+    landed = [f for f in _data_files(path) if f not in before]
+    return (
+        _is_local(path) and _footer_stats(landed, cols)
+    ) or scan_stats(frame, cols)
+
+
 def rewrite_parquet_dir(
     spark,
     path: str,
@@ -241,54 +389,51 @@ def rewrite_parquet_dir(
     order_by: list[str] | None = None,
 ) -> dict:
     """Replace ``path``'s parquet contents with ``frame`` laid out as
-    ``ceil(rows / target_rows_per_file)`` files: write the new layout
+    ``ceil(bound / target_rows_per_file)`` files, where ``bound`` is a
+    row bound the driver already has: ``n_rows`` when the caller knows
+    the frame's size, else the row count of the layout being replaced
+    (its footers — a compaction's frame is that layout minus what it
+    resolves away). The write is the single Spark action over
+    ``frame``: no persist, no count job. One file is written from a
+    single partition without a shuffle; more are round-robin (or, with
+    ``order_by``, range) partitioned. The layout is written
     COMPLETELY into a sibling temp directory (this executes any read
-    of the old files), then swap via rename-aside — the old directory
-    is renamed to ``path.__old__`` BEFORE the new one is renamed in,
-    so a COMPLETE copy of the data exists on disk at every instant.
-    Crash contract: a crash during the new-layout write or before the
-    first rename leaves the old layout live (plus a temp dir); a
-    crash between the two renames leaves NO directory at ``path`` but
-    BOTH complete copies beside it — recovery is a single rename of
-    either surviving copy (``path.__compact__`` = new or
-    ``path.__old__`` = old) back to ``path``; a crash after the
-    second rename leaves the new layout live plus at most a leftover
-    ``.__old__`` dir, which the next rewrite clears. Unless the
-    caller passes ``n_rows``, the frame is persisted (memory-and-disk,
-    the maintenance-job norm) across the row count and the write so
-    merge-on-read views (tombstone anti-joins) compute ONCE, not once
-    per action. Returns ``{"rows", "files_before", "files_after"}``."""
+    of the old files), then swapped in via rename-aside — the old
+    directory is renamed to ``path.__old__`` BEFORE the new one is
+    renamed in, so a COMPLETE copy of the data exists on disk at every
+    instant. Crash contract: a crash during the new-layout write or
+    before the first rename leaves the old layout live (plus a temp
+    dir); a crash between the two renames leaves NO directory at
+    ``path`` but BOTH complete copies beside it — recovery is a single
+    rename of either surviving copy (``path.__compact__`` = new or
+    ``path.__old__`` = old) back to ``path``; a crash after the second
+    rename leaves the new layout live plus at most a leftover
+    ``.__old__`` dir, which the next rewrite clears.
+    Returns ``{"rows", "files_before", "files_after"}``, ``rows`` read
+    from the new files' footers."""
     local = local_path(path)
     tmp = local + ".__compact__"
-
-    def _write(fr: DataFrame, n: int) -> None:
-        parts = max(1, math.ceil(n / max(target_rows_per_file, 1)))
+    if n_rows is None:
+        old = footer_stats(path)
+        n_rows = old.rows if old is not None else 0
+    parts = max(1, math.ceil(int(n_rows) / max(target_rows_per_file, 1)))
+    if parts == 1:
+        frame = frame.coalesce(1)
         if order_by:
-            # range-partitioned + sorted layout: per-file min/max
-            # column statistics become TIGHT on the order keys, so a
-            # later literal/IN pushdown prunes files and row groups
-            # (the retraction locate-scan treatment — SCALE.md)
-            fr = fr.repartitionByRange(parts, *order_by).sortWithinPartitions(
-                *order_by
-            )
-        else:
-            fr = fr.repartition(parts)
-        shutil.rmtree(tmp, ignore_errors=True)
-        fr.write.mode("overwrite").parquet(tmp)
-
-    if n_rows is not None:
-        # caller already knows the count (e.g. update()'s fused metrics
-        # job counted the checkpointed frame) — skip the persist+count
-        # job; the write is then the single action over the frame
-        n = int(n_rows)
-        _write(frame, n)
+            frame = frame.sortWithinPartitions(*order_by)
+    elif order_by:
+        # range-partitioned + sorted layout: per-file min/max column
+        # statistics become TIGHT on the order keys, so a later
+        # literal/IN pushdown prunes files and row groups (the
+        # retraction locate-scan treatment — SCALE.md)
+        frame = frame.repartitionByRange(parts, *order_by).sortWithinPartitions(
+            *order_by
+        )
     else:
-        frame = frame.persist()
-        try:
-            n = frame.count()
-            _write(frame, n)
-        finally:
-            frame.unpersist()
+        frame = frame.repartition(parts)
+    shutil.rmtree(tmp, ignore_errors=True)
+    frame.write.mode("overwrite").parquet(tmp)
+    new = footer_stats(tmp)
     files_before = count_data_files(path)
     old_aside = local + ".__old__"
     shutil.rmtree(old_aside, ignore_errors=True)
@@ -296,7 +441,7 @@ def rewrite_parquet_dir(
     os.rename(tmp, local)
     shutil.rmtree(old_aside)
     return {
-        "rows": int(n),
+        "rows": new.rows,
         "files_before": files_before,
         "files_after": count_data_files(path),
     }

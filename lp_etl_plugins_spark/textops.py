@@ -1683,7 +1683,7 @@ class RepeatIndex:
 
     def _compact_unfenced(self, *, target_rows_per_file: int = 1 << 20) -> dict:
         spark, p, m = self._spark, self._path, self.meta
-        log = spark.read.parquet(f"{p}/spans")
+        log = storage.read_parquet_pinned(spark, f"{p}/spans")
         n_u = int(m["n_updates"])
         n_r = int(m.get("n_retractions") or 0)
         # refuse uncommitted rows of either protocol: resolving the
@@ -1694,7 +1694,7 @@ class RepeatIndex:
         has_led = storage.parquet_dir_exists(f"{p}/retracted")
         if not torn and has_led:
             torn = bool(
-                spark.read.parquet(f"{p}/retracted")
+                storage.read_parquet_pinned(spark, f"{p}/retracted")
                 .filter(F.col("rseq") > n_r)
                 .limit(1)
                 .count()
@@ -1757,7 +1757,7 @@ class RepeatIndex:
             out["retracted"] = storage.rewrite_parquet_dir(
                 spark,
                 f"{p}/retracted",
-                spark.read.parquet(f"{p}/retracted").filter(
+                storage.read_parquet_pinned(spark, f"{p}/retracted").filter(
                     F.col("rseq") <= n_r
                 ),
                 target_rows_per_file,
@@ -2981,7 +2981,7 @@ class DedupIndex:
             self.n_retractions = int(m.get("n_retractions") or 0)
             spark = self._delta["bands"].sparkSession
             if (
-                spark.read.parquet(f"{path}/retracted")
+                storage.read_parquet_pinned(spark, f"{path}/retracted")
                 .filter(F.col("rseq") > self.n_retractions)
                 .limit(1)
                 .count()
@@ -2997,7 +2997,9 @@ class DedupIndex:
             if repair:
                 spark = delta.sparkSession
                 delta = delta.join(
-                    spark.read.parquet(f"{path}/{stage}"), keys, "left_anti"
+                    storage.read_parquet_pinned(spark, f"{path}/{stage}"),
+                    keys,
+                    "left_anti",
                 ).localCheckpoint()  # materialize before appending to the read dir
             delta.write.mode("append").parquet(f"{path}/{stage}")
 
@@ -3135,8 +3137,8 @@ class DedupIndex:
         stages, so a year of daily deltas leaves ~365 file appends per
         substrate and every later scan pays the per-file open/footer
         cost (read amplification grows with update count, not data).
-        Compaction re-partitions each stage to
-        ``ceil(rows / target_rows_per_file)`` files; the index is
+        Compaction re-lays each stage into files of at most
+        ``target_rows_per_file`` rows; the index is
         append-only (no tombstones), so this is a pure file re-layout
         — row content is untouched and ``load`` serves identical
         frames (equality-tested in tests/test_dedup_index.py).
@@ -3170,7 +3172,7 @@ class DedupIndex:
             n_r = int(
                 storage.read_control_row(f"{path}/meta").get("n_retractions") or 0
             )
-            led = spark.read.parquet(led_path)
+            led = storage.read_parquet_pinned(spark, led_path)
             if led.filter(F.col("rseq") > n_r).limit(1).count():
                 raise TornStateError(
                     "DedupIndex.compact: uncommitted retraction ledger "
@@ -3185,7 +3187,7 @@ class DedupIndex:
         for stage in cls._STAGES:
             if not storage.parquet_dir_exists(f"{path}/{stage}"):
                 continue
-            df = spark.read.parquet(f"{path}/{stage}")
+            df = storage.read_parquet_pinned(spark, f"{path}/{stage}")
             if tombs is not None and stage == "bands":
                 df = df.join(F.broadcast(tombs), "id", "left_anti")
             elif tombs is not None and stage in ("pairs", "verified"):
@@ -3206,7 +3208,7 @@ class DedupIndex:
             out["retracted"] = storage.rewrite_parquet_dir(
                 spark,
                 led_path,
-                spark.read.parquet(led_path),
+                storage.read_parquet_pinned(spark, led_path),
                 target_rows_per_file,
             )
             storage.stamp_resolved_retractions(path, n_r)
@@ -3827,13 +3829,13 @@ class TrigramLM:
         n_r = int(m.get("n_retractions") or 0)
         spark = self._retract_delta["counts"].sparkSession
         raw = self._raw_counts(spark, path)
-        # both torn-state probes in ONE pass over the count log (were
-        # two limit(1) jobs): unstamped update rows show as src above
-        # the stamp, uncommitted negative segments as src below -n_r
-        src_bounds = raw.agg(
-            F.max("src").alias("hi"), F.min("src").alias("lo")
-        ).first()
-        if src_bounds["hi"] is not None and int(src_bounds["hi"]) > int(stamp):
+        # both torn-state probes from the count log's src bounds (the
+        # footers, else one aggregate): unstamped update rows show as
+        # src above the stamp, uncommitted negative segments as src
+        # below -n_r
+        src = storage.dir_stats(f"{path}/counts", raw, ["src"])
+        lo, hi = src.lo["src"], src.hi["src"]
+        if hi is not None and int(hi) > int(stamp):
             raise ValueError(
                 "TrigramLM.retract_saved: unstamped UPDATE segment rows on "
                 "disk — a previous append crashed before its meta stamp; "
@@ -3844,7 +3846,7 @@ class TrigramLM:
         has_ledger = storage.parquet_dir_exists(ledger_path)
         if has_ledger:
             storage.recover_swapped_dir(ledger_path)
-        if src_bounds["lo"] is not None and int(src_bounds["lo"]) < -n_r:
+        if lo is not None and int(lo) < -n_r:
             # a previous retract_saved crashed between its segment
             # append and its meta commit — purge the uncommitted
             # segment rows (they are self-describing: src < -n_r),
@@ -3919,10 +3921,25 @@ class TrigramLM:
         sequence."""
         if stamp is None:
             return raw
-        return raw.filter(
+        return raw.filter(TrigramLM._committed_src(stamp, n_retractions))
+
+    @staticmethod
+    def _committed_src(stamp, n_retractions: int) -> Column:
+        """Row predicate of :meth:`_committed` (``stamp`` not None)."""
+        return (
             F.col("src").isNull()
             | ((F.col("src") >= 0) & (F.col("src") <= int(stamp)))
             | ((F.col("src") < 0) & (-F.col("src") <= int(n_retractions)))
+        )
+
+    @staticmethod
+    def _torn_src(path: str, raw: DataFrame, stamp, n_retractions: int) -> bool:
+        """Any segment row beyond either commit stamp (src above the id
+        high-water mark, or below ``-n_retractions``) — decided by the
+        count log's src bounds, from its footers when they answer."""
+        b = storage.dir_stats(f"{path}/counts", raw, ["src"])
+        return b.hi["src"] is not None and (
+            int(b.hi["src"]) > int(stamp) or int(b.lo["src"]) < -int(n_retractions)
         )
 
     def save(self, path: str) -> None:
@@ -4330,8 +4347,8 @@ class TrigramLM:
         O(delta-vocab) segment, so the merge-on-read groupBy and the
         per-file open cost grow with UPDATE COUNT, not data.
         Compaction resolves the additive merge once (one row per gram,
-        stamped at the current high-water mark) and re-partitions to
-        ``ceil(rows / target_rows_per_file)`` files. The served
+        stamped at the current high-water mark) and re-lays it into
+        files of at most ``target_rows_per_file`` rows. The served
         COUNTS VIEW is row-identical before and after
         (equality-tested); the swap is the same rename-aside contract
         as every other family's compact.
@@ -4356,9 +4373,7 @@ class TrigramLM:
         stamp = m.get("max_id")
         n_r = int(m.get("n_retractions") or 0)
         raw = cls._raw_counts(spark, path)
-        if stamp is not None and raw.filter(
-            (F.col("src") > int(stamp)) | (F.col("src") < -n_r)
-        ).limit(1).count():
+        if stamp is not None and cls._torn_src(path, raw, stamp, n_r):
             raise TornStateError(
                 "TrigramLM.compact: uncommitted segment rows on disk — a "
                 "previous append (or retraction) crashed before its meta "
@@ -4383,7 +4398,7 @@ class TrigramLM:
             out["retracted"] = storage.rewrite_parquet_dir(
                 spark,
                 f"{path}/retracted",
-                spark.read.parquet(f"{path}/retracted").filter(
+                storage.read_parquet_pinned(spark, f"{path}/retracted").filter(
                     F.col("rseq") <= n_r
                 ),
                 target_rows_per_file,

@@ -1134,36 +1134,40 @@ class VectorIndex:
         )
         return est >= self._stage_threshold(self, stage)
 
+    @staticmethod
+    def _dir_gate(holder, path: str, stage: str) -> bool:
+        """The one on-disk gate both :meth:`_layout_dir_stage` and
+        :meth:`_prune_stage` answer from: actual stage bytes (one driver
+        listdir, no Spark job) against the threshold scaled DOWN by the
+        parquet encode factor, so it agrees with save()'s ~3×-
+        overestimated write gate (advice r11 #2). One gate for both, so
+        every stage that carries the sorted pruning layout also prunes
+        with it, including stages in [threshold/3, threshold)."""
+        total = VectorIndex._dir_stage_bytes(path, stage)
+        return total is not None and total >= (
+            VectorIndex._stage_threshold(holder, stage)
+            // VectorIndex._LAYOUT_ENCODE_FACTOR
+        )
+
     @classmethod
     def _layout_dir_stage(cls, path: str, stage: str) -> bool:
         """compact()/retrain_coarse() twin of :meth:`_layout_stage`:
         the stage already exists on disk, so the gate reads its actual
-        size (one driver listdir). Actual bytes are compared against
-        the threshold scaled DOWN by the parquet encode factor, so the
-        maintenance gate agrees with save()'s ~3×-overestimated write
-        gate — without this, a stage in the [threshold/3, threshold)
-        actual-size window had its just-paid-for sorted layout silently
-        dropped by the next compact/retrain (advice r11 #2). Honors
-        the CLASS-level ``_PRUNE_STAGE_BYTES`` override only — these
-        callers are classmethods with no instance (documented in
-        :meth:`_stage_threshold`)."""
-        total = cls._dir_stage_bytes(path, stage)
-        if total is None:
-            return False
-        return total >= cls._stage_threshold(cls, stage) // cls._LAYOUT_ENCODE_FACTOR
+        size (:meth:`_dir_gate`) — without it, a stage in the
+        [threshold/3, threshold) actual-size window had its
+        just-paid-for sorted layout silently dropped by the next
+        compact/retrain. Honors the CLASS-level ``_PRUNE_STAGE_BYTES``
+        override only — these callers are classmethods with no
+        instance (documented in :meth:`_stage_threshold`)."""
+        return cls._dir_gate(cls, path, stage)
 
     def _prune_stage(self, stage: str) -> bool:
         """Should the literal-IN file-pruning path engage for this
         stage? True only for a LOADED index (a directory exists) whose
-        stage is large on disk — one driver-side listdir, no Spark
-        job."""
+        stage passes :meth:`_dir_gate` — the same gate that decides
+        whether the stage carries the pruning layout."""
         path = getattr(self, "_path", None)
-        if path is None:
-            return False
-        total = self._dir_stage_bytes(path, stage)
-        if total is None:
-            return False
-        return total >= self._stage_threshold(self, stage)
+        return path is not None and self._dir_gate(self, path, stage)
 
     def _codes_with_bucket(self, codes: DataFrame) -> DataFrame:
         """Attach each code row's coarse ``bucket`` (from
@@ -1753,12 +1757,13 @@ class VectorIndex:
             self._append_saved_locked(path)
 
     def _append_saved_locked(self, path: str) -> None:
-        self._delta["corpus_lists"].write.mode("append").parquet(
-            f"{path}/corpus_lists"
+        # the landed files' footers give the delta's high-water mark
+        landed = storage.append_parquet(
+            self._delta["corpus_lists"], f"{path}/corpus_lists", ["id"]
         )
         delta_codes = self._delta["codes"]
-        dir_cols = delta_codes.sparkSession.read.parquet(
-            f"{path}/codes"
+        dir_cols = storage.read_parquet_pinned(
+            delta_codes.sparkSession, f"{path}/codes"
         ).columns
         if "bucket" in dir_cols and "bucket" not in delta_codes.columns:
             # landing onto a bucket-layout directory (round 11): the
@@ -1782,7 +1787,7 @@ class VectorIndex:
             self._delta["sq8_codes"].write.mode("append").parquet(
                 f"{path}/sq8_codes"
             )
-        hi = self._delta["corpus_lists"].agg(F.max("id")).first()[0]
+        hi = landed.hi["id"]
         if hi is not None:
             old = getattr(self, "max_id", None)
             self.max_id = int(hi) if old is None else max(int(hi), int(old))
@@ -1826,16 +1831,19 @@ class VectorIndex:
             tomb_dir = f"{path}/tombstones"
             tombs = None
             if storage.parquet_dir_exists(tomb_dir):
-                t = spark.read.parquet(tomb_dir).select("id").distinct()
-                if t.first() is not None:
-                    tombs = t.localCheckpoint()
+                # the anti-joins below are set semantics, so replayed
+                # duplicate tombstone rows need no distinct pass; the
+                # footers say whether there is any row at all
+                t = storage.read_parquet_pinned(spark, tomb_dir).select("id")
+                if storage.dir_stats(tomb_dir, t).rows:
+                    tombs = t
             stages = list(cls._STAGES) + [
                 s for s in cls._REFINE_STAGES
                 if storage.parquet_dir_exists(f"{path}/{s}")
             ]
             out = {}
             for stage in stages:
-                df = spark.read.parquet(f"{path}/{stage}")
+                df = storage.read_parquet_pinned(spark, f"{path}/{stage}")
                 cols = df.columns
                 if tombs is not None and stage in ("corpus_lists", "sq8_codes"):
                     df = df.join(
@@ -1867,8 +1875,8 @@ class VectorIndex:
                         # this reads the just-compacted (tombstone-
                         # resolved) lists — live rows only
                         df = df.join(
-                            spark.read.parquet(
-                                f"{path}/corpus_lists"
+                            storage.read_parquet_pinned(
+                                spark, f"{path}/corpus_lists"
                             ).select(
                                 F.col("id").alias("neighbor_id"), "bucket"
                             ),
@@ -1885,9 +1893,7 @@ class VectorIndex:
                 )
             if storage.parquet_dir_exists(tomb_dir):
                 # resolved into the rewrites above — clear the log
-                spark.createDataFrame([], "id bigint").write.mode(
-                    "overwrite"
-                ).parquet(tomb_dir)
+                storage.write_control_parquet(tomb_dir, [], "id bigint")
                 out["tombstones"] = {
                     "rows": 0, "files_before": None, "files_after": None,
                 }

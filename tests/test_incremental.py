@@ -233,6 +233,25 @@ def test_monotone_contract_enforced(spark, tmp_path):
         st.update(docs.filter("doc_id == 40"))
 
 
+def test_null_doc_id_refused_at_entry(spark, tmp_path):
+    """build and update refuse a null doc_id before exact dedup runs
+    (its min_by skips null orderings) and before anything is written."""
+    schema = "doc_id long, source string, text string"
+    docs = spark.createDataFrame(_crafted_rows(), schema)
+    bad = spark.createDataFrame(
+        [(None, "web", "a document that arrived without an id")], schema
+    )
+    path = tmp_path / "refused"
+    with pytest.raises(ValueError, match="null doc_id"):
+        CurationState.build(spark, docs.filter("doc_id < 100").unionByName(bad), str(path))
+    assert not path.exists()
+    st = CurationState.build(spark, docs.filter("doc_id < 100"), str(tmp_path / "inc"))
+    n_before = st.meta["n_working"]
+    with pytest.raises(ValueError, match="null doc_id"):
+        st.update(docs.filter("doc_id >= 100").unionByName(bad))
+    assert CurationState.load(spark, str(tmp_path / "inc")).meta["n_working"] == n_before
+
+
 @pytest.mark.slow
 def test_streamed_ingestion_equals_batch_rebuild(spark, tmp_path):
     """Micro-batch ingestion through foreach_batch_update: two delta

@@ -797,6 +797,41 @@ def test_serving_scan_pruning_tiers(spark, tmp_path):
     assert _rows(forced.search(probes, 3, nprobe=2)) == s_want
 
 
+def test_prune_gate_agrees_with_layout_gate(spark, tmp_path):
+    """A stage whose on-disk size lies in [T/3, T) carries the pruning
+    layout (compact keeps and upgrades it by the actual-bytes gate), so
+    the serving read must prune it too: both gates compare the stage
+    bytes with the threshold divided by the parquet encode factor. Just
+    below T/3 neither engages."""
+    emb = IV._emb(spark, SF_SMOKE)
+    probes = _probes(emb)
+    idx = VectorIndex(emb)
+    path = str(tmp_path / "vidx")
+    idx._PRUNE_STAGE_BYTES = 0  # write the bucket layout
+    idx.save(path)
+    loaded = VectorIndex.load(spark, path)
+    size = VectorIndex._dir_stage_bytes(path, "codes")
+    f = VectorIndex._LAYOUT_ENCODE_FACTOR
+    assert size and "bucket" in loaded._codes.columns
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    want = _rows(loaded.search(probes, 3, nprobe=2))
+    for t, engaged in ((size * f, True), (size + 1, True), (size * f + f, False)):
+        assert (t // f <= size < t) is engaged
+        loaded._PRUNE_STAGE_BYTES = t
+        VectorIndex._PRUNE_STAGE_BYTES = t
+        try:
+            assert VectorIndex._layout_dir_stage(path, "codes") is engaged
+            assert loaded._prune_stage("codes") is engaged
+        finally:
+            VectorIndex._PRUNE_STAGE_BYTES = None
+        p = plan(loaded.search(probes, 3, nprobe=2))
+        assert ("INSET" in p or " IN (" in p) is engaged, t
+        assert _rows(loaded.search(probes, 3, nprobe=2)) == want
+
+
 def test_update_sq8_delta_only_encode(spark):
     """VERDICT r11 Next #5: an update() on an index with materialized
     refine stages encodes ONLY the delta against the frozen SQ8
